@@ -116,6 +116,26 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
     * resurrection).
     */
   private val gcEpochKey = s"$storePrefix:__gcepoch__".getBytes("UTF-8")
+  /** `numKeys,sizeBytes` of the resolved state at version `v`, written in
+    * the same atomic batch as the version's data and GC'd with it, so
+    * stats never need a chain resolution.
+    */
+  private def statsKey(v: Long): Array[Byte] = s"$storePrefix:__stats__:$v".getBytes("UTF-8")
+
+  private def readStats(v: Long): Option[(Long, Long)] =
+    Option(client.get(statsKey(v))).map { raw =>
+      val Array(keys, bytes) = new String(raw, "UTF-8").split(',')
+      (keys.toLong, bytes.toLong)
+    }
+
+  private def encodeStats(stats: (Long, Long)): Array[Byte] =
+    s"${stats._1},${stats._2}".getBytes("UTF-8")
+
+  /** Stats contribution of one resolved entry (key sans version prefix). */
+  private def entrySize(key: Array[Byte], value: Array[Byte]): Long = key.length + value.length
+
+  private def countStats(state: TreeMap[BytesKey, Array[Byte]]): (Long, Long) =
+    (state.size.toLong, state.iterator.map { case (k, v) => entrySize(k.bytes, v) }.sum)
 
   private def readGcEpoch(): Long = {
     val raw = client.get(gcEpochKey)
@@ -150,10 +170,8 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
     else new String(raw, "UTF-8").split(',').filter(_.nonEmpty).map(_.toLong).toSet
   }
 
-  private def writeVersionSet(key: Array[Byte], vs: Set[Long],
-                              extraPuts: Seq[(Array[Byte], Array[Byte])] = Seq.empty): Unit =
-    client.writeBatch(
-      extraPuts :+ (key -> vs.toSeq.sorted.mkString(",").getBytes("UTF-8")), Seq.empty)
+  private def encodeVersionSet(vs: Set[Long]): Array[Byte] =
+    vs.toSeq.sorted.mkString(",").getBytes("UTF-8")
 
   private def committed(): Set[Long] = readVersionSet(versionsKey)
   private def bases(): Set[Long] = readVersionSet(basesKey)
@@ -162,25 +180,43 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
 
   /** Versions to consult for a read as of `asOf`, OLDEST FIRST, starting at
     * the newest base ≤ asOf (or the oldest committed version if no base —
-    * the first commit acts as one).
+    * the first commit acts as one). `bs` is read only when needed.
     */
-  private def chainAsOf(asOf: Long): Seq[Long] = {
-    val vs = committed().filter(_ <= asOf)
+  private def chainOf(committedVs: Set[Long], bs: => Set[Long], asOf: Long): Seq[Long] = {
+    val vs = committedVs.filter(_ <= asOf)
     if (vs.isEmpty) return Seq.empty
-    val start = bases().filter(_ <= asOf) match {
+    val start = bs.filter(_ <= asOf) match {
       case b if b.nonEmpty => b.max
       case _ => vs.min
     }
     vs.filter(_ >= start).toSeq.sorted
   }
 
+  private def chainAsOf(asOf: Long): Seq[Long] = chainOf(committed(), bases(), asOf)
+
   private def strip(full: Array[Byte], prefix: Array[Byte]): Array[Byte] =
     java.util.Arrays.copyOfRange(full, prefix.length, full.length)
 
-  /** Full resolved state at `asOf` (server side only, no overlay). */
-  private def resolveAt(asOf: Long, prefix: Array[Byte]): TreeMap[BytesKey, Array[Byte]] = {
+  /** Newest→oldest point read through `chainNewestFirst`: the first
+    * version with an entry decides (Some(None) = tombstone, None = no
+    * entry anywhere), plus the number of keyspaces probed.
+    */
+  private def lookup(chainNewestFirst: IndexedSeq[Long],
+                     key: Array[Byte]): (Option[Option[Array[Byte]]], Int) = {
+    var i = 0
+    var decided: Option[Option[Array[Byte]]] = None
+    while (decided.isEmpty && i < chainNewestFirst.length) {
+      val framed = client.get(versionPrefix(chainNewestFirst(i)) ++ key)
+      if (framed != null) decided = Some(unframe(framed))
+      i += 1
+    }
+    (decided, i)
+  }
+
+  /** Full resolved state through `chain` (server side only, no overlay). */
+  private def resolve(chain: Seq[Long], prefix: Array[Byte]): TreeMap[BytesKey, Array[Byte]] = {
     var acc = TreeMap.empty[BytesKey, Array[Byte]](ByteOrdering)
-    chainAsOf(asOf).foreach { v =>
+    chain.foreach { v =>
       val p = versionPrefix(v)
       client.scanPrefix(p ++ prefix).foreach { case (k, framed) =>
         val key = new BytesKey(strip(k, p))
@@ -209,11 +245,29 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
     // tripwire in get() below rather than silently returning wrong data.
     val readChainNewestFirst: IndexedSeq[Long] = chainAsOf(loadVersion).reverse.toIndexedSeq
     val gcEpochAtOpen = readGcEpoch()
+    // the loaded version's stats, carried with it; a version written
+    // before stats were (older checkpoints) costs one full resolution
+    val loadedStats: (Long, Long) = readChainNewestFirst.headOption match {
+      case None => (0L, 0L)
+      case Some(v) => readStats(v).getOrElse {
+        registryLock.synchronized {
+          countStats(resolve(chainAsOf(loadVersion), Array.emptyByteArray))
+        }
+      }
+    }
 
     new StoreSession {
       // local overlay: server state stays untouched until commit (the
       // MULTI/EXEC discipline — and abort is a real rollback)
       private var overlay = TreeMap.empty[BytesKey, Option[Array[Byte]]](ByteOrdering)
+
+      // each touched key's entrySize in the loaded version (-1 = absent):
+      // from the get() that already read it, else probed when stats are
+      // needed, so numKeys/sizeBytes = loadedStats + the overlay's net change
+      private val priorSize = scala.collection.mutable.HashMap.empty[BytesKey, Long]
+
+      // stats written with this session's committed version
+      private var committedStats: Option[(Long, Long)] = None
 
       // highest epoch at which the captured chain was re-verified intact
       // (avoids re-reading the registries on every exposed get)
@@ -257,34 +311,27 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
         verifiedEpoch = epoch
       }
 
-      def get(key: Array[Byte]): Array[Byte] =
-        overlay.get(new BytesKey(key)) match {
+      def get(key: Array[Byte]): Array[Byte] = {
+        val bk = new BytesKey(key)
+        overlay.get(bk) match {
           case Some(Some(v)) => v
           case Some(None) => null
           case None =>
-            // newest→oldest: the first version with an entry decides
-            var i = 0
-            var decided: Option[Option[Array[Byte]]] = None
-            while (decided.isEmpty && i < readChainNewestFirst.length) {
-              val framed = client.get(versionPrefix(readChainNewestFirst(i)) ++ key)
-              if (framed != null) decided = Some(unframe(framed))
-              i += 1
-            }
+            val (decided, probed) = lookup(readChainNewestFirst, key)
             // any probe that fell past the newest chained keyspace is the
             // exact shape a GC'd version (lost tombstone) produces
-            if (i > 1 || decided.isEmpty) checkChainIntact()
-            decided.flatten.orNull
+            if (probed > 1 || decided.isEmpty) checkChainIntact()
+            val value = decided.flatten
+            priorSize(bk) = value.fold(-1L)(entrySize(key, _))
+            value.orNull
         }
+      }
 
-      def put(key: Array[Byte], value: Array[Byte]): Unit = {
+      def put(key: Array[Byte], value: Array[Byte]): Unit =
         overlay += (new BytesKey(key) -> Some(value))
-        mutations += 1
-      }
 
-      def remove(key: Array[Byte]): Unit = {
+      def remove(key: Array[Byte]): Unit =
         overlay += (new BytesKey(key) -> None)
-        mutations += 1
-      }
 
       def scan(prefix: Array[Byte]): KvScanIterator = {
         // registryLock: chain resolution + version-keyspace scans must be
@@ -294,7 +341,9 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
         // cycle), silently dropping that version's entries — fatally, its
         // TOMBSTONES (caught by KvConcurrencySuite: a baked-in base
         // resurrected a key whose tombstone's version vanished mid-scan)
-        var merged = registryLock.synchronized { resolveAt(loadVersion, prefix) }
+        var merged = registryLock.synchronized {
+          resolve(chainAsOf(loadVersion), prefix)
+        }
         overlay.iterator.filter(e => ByteOrdering.hasPrefix(e._1.bytes, prefix))
           .foreach {
             case (k, Some(v)) => merged += (k -> v)
@@ -302,6 +351,32 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
           }
         // materialized merge: the iterator holds no server resources
         KvScanIterator.wrap(merged.iterator.map { case (k, v) => (k.bytes, v) })
+      }
+
+      /** Fill in the prior size of every overlay key no get() has read.
+        * Callers hold registryLock and pass a chain resolved under it —
+        * NOT the open-time chain, which maintenance may have GC'd by now
+        * (the get() tripwire only guards reads through that chain).
+        */
+      private def probeUnread(chain: => Seq[Long]): Unit = {
+        val unread = overlay.keysIterator.filterNot(priorSize.contains).toVector
+        if (unread.nonEmpty) {
+          val newestFirst = chain.reverse.toIndexedSeq
+          unread.foreach { k =>
+            priorSize(k) = lookup(newestFirst, k.bytes)._1.flatten.fold(-1L)(entrySize(k.bytes, _))
+          }
+        }
+      }
+
+      /** loadedStats plus the overlay's net change (all priors known). */
+      private def netStats(): (Long, Long) = {
+        var (keys, bytes) = loadedStats
+        overlay.foreach { case (k, now) =>
+          val before = priorSize(k)
+          if (before >= 0) { keys -= 1; bytes -= before }
+          now.foreach { v => keys += 1; bytes += entrySize(k.bytes, v) }
+        }
+        (keys, bytes)
       }
 
       def commit(): Unit = {
@@ -314,82 +389,76 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
         // and scanning it, baking resurrected keys into the base
         // (KvConcurrencySuite caught exactly this)
         registryLock.synchronized {
-        val puts: Seq[(Array[Byte], Array[Byte])] =
-          if (isBase) {
-            // cadence base: materialize the full resolved state (amortized
-            // O(state)/interval, like the RocksDB zip-snapshot cadence) so
-            // read chains and recovery stay bounded
-            var full = resolveAt(loadVersion, Array.emptyByteArray)
-            overlay.foreach {
-              case (k, Some(v)) => full += (k -> v)
-              case (k, None) => full -= k
+          // each registry is read once per commit
+          val vs = committed()
+          lazy val bs = bases()
+          lazy val chain = chainOf(vs, bs, loadVersion)
+          val (puts, stats): (Seq[(Array[Byte], Array[Byte])], (Long, Long)) =
+            if (isBase) {
+              // cadence base: materialize the full resolved state (amortized
+              // O(state)/interval, like the RocksDB zip-snapshot cadence) so
+              // read chains and recovery stay bounded
+              var full = resolve(chain, Array.emptyByteArray)
+              overlay.foreach {
+                case (k, Some(v)) => full += (k -> v)
+                case (k, None) => full -= k
+              }
+              (full.iterator.map { case (k, v) => (writePrefix ++ k.bytes, framePut(v)) }.toSeq,
+                countStats(full))
+            } else {
+              // delta commit: writes and stats work ∝ this batch's changes
+              probeUnread(chain)
+              (overlay.iterator.map {
+                case (k, Some(v)) => (writePrefix ++ k.bytes, framePut(v))
+                case (k, None) => (writePrefix ++ k.bytes, tombstone)
+              }.toSeq, netStats())
             }
-            full.iterator.map { case (k, v) => (writePrefix ++ k.bytes, framePut(v)) }.toSeq
-          } else {
-            // delta commit: writes ∝ this batch's changes only
-            overlay.iterator.map {
-              case (k, Some(v)) => (writePrefix ++ k.bytes, framePut(v))
-              case (k, None) => (writePrefix ++ k.bytes, tombstone)
-            }.toSeq
-          }
           // replayed commit (batch re-run after restart): the recomputed
           // delta may differ from the earlier attempt, and plain overwrites
           // would leave the old attempt's extra keys alive in this version
           // and every later chain read. Delete them in the SAME atomic
           // batch (puts win: deletes exclude any key being re-put).
           val staleDeletes: Seq[Array[Byte]] =
-            if (committed().contains(commitVersion)) {
+            if (vs.contains(commitVersion)) {
               val putKeys = puts.iterator.map(p => new BytesKey(p._1)).toSet
               client.scanPrefix(writePrefix).map(_._1)
                 .filterNot(k => putKeys.contains(new BytesKey(k))).toSeq
             } else Seq.empty
-          // one atomic batch: the version's data plus both registry updates
+          // one atomic batch: the version's data, its stats and both
+          // registry updates
           val registryPuts = Seq(
-            versionsKey -> (committed() + commitVersion).toSeq.sorted.mkString(",").getBytes("UTF-8")) ++
-            (if (isBase)
-              Seq(basesKey -> (bases() + commitVersion).toSeq.sorted.mkString(",").getBytes("UTF-8"))
-            else Seq.empty)
+            versionsKey -> encodeVersionSet(vs + commitVersion),
+            statsKey(commitVersion) -> encodeStats(stats)) ++
+            (if (isBase) Seq(basesKey -> encodeVersionSet(bs + commitVersion)) else Seq.empty)
           client.writeBatch(puts ++ registryPuts, staleDeletes)
+          committedStats = Some(stats)
         }
       }
 
-      def abort(): Unit = { overlay = TreeMap.empty(ByteOrdering); mutations += 1 }
+      def abort(): Unit = overlay = TreeMap.empty(ByteOrdering)
 
-      // Spark reads BOTH numKeys and sizeBytes from metrics after every
-      // batch; resolving the full version chain twice per batch would be
-      // O(total state) × 2 at the exact layer the delta-commit design
-      // exists to keep O(delta). One shared resolution per stats request,
-      // invalidated by writes.
-      // invalidation key = a counter bumped on EVERY overlay mutation,
-      // not overlay.size: overwriting an existing key (or a remove+put
-      // landing back on the same size) changes the bytes without
-      // changing the size, and size-keyed caching would serve them stale
-      private var mutations = 0L
-      private var statsCache: Option[(Long, Long, Long)] = None // keys, bytes, mutations
-      private def stats: (Long, Long) = {
-        statsCache match {
-          case Some((k, b, m)) if m == mutations => (k, b)
-          case _ =>
-            var keys = 0L
-            var bytes = 0L
-            val it = scan(Array.emptyByteArray)
-            try it.foreach { case (k, v) => keys += 1; bytes += k.length + v.length }
-            finally it.close()
-            statsCache = Some((keys, bytes, mutations))
-            (keys, bytes)
-        }
+      // Spark reads numKeys and sizeBytes after every batch: both come from
+      // the stats carried with the loaded version plus this session's
+      // delta — O(delta), never a chain resolution
+      private def stats: (Long, Long) = committedStats.getOrElse {
+        if (overlay.keysIterator.exists(k => !priorSize.contains(k)))
+          registryLock.synchronized(probeUnread(chainAsOf(loadVersion)))
+        netStats()
       }
       def numKeys: Long = stats._1
       def sizeBytes: Long = stats._2
     }
   }
 
-  /** Compaction + GC: materialize a base at the retention horizon, then
-    * drop every older version's keyspace.
+  /** GC up to the retention horizon: the newest registered base at or
+    * below the oldest version to retain. Cadence bases make that a pure
+    * registry flip; only when no base is old enough (cadence off, or not
+    * yet reached) is one materialized at the newest version ≤ the
+    * horizon, then every older version's keyspace is dropped.
     *
     * Crash- and reader-safety (Spark runs this on a background thread
     * concurrent with task-thread reads):
-    *  1. The materialized base is WRITTEN FIRST, in one atomic batch with
+    *  1. A materialized base is WRITTEN FIRST, in one atomic batch with
     *     the bases-registry flip. The materialized values equal the
     *     chain-resolved values at the horizon, so a concurrent reader
     *     folding an old chain through the horizon keyspace sees identical
@@ -403,32 +472,37 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
     *  3. Version GC is EPOCH-DEFERRED: this run only DEREGISTERS versions
     *     below the horizon (removes them from the registries, so no new
     *     chain can reference them) and physically deletes the keyspaces
-    *     deregistered by the PREVIOUS run. Any chain — even one computed
-    *     from a registry read racing the shrink — only contains versions
-    *     deregistered at most one run ago, whose data is still intact, so
-    *     concurrent chain reads never dangle. The remaining exposure is a
-    *     session that stays open across a FULL maintenance cycle while
-    *     reading a version below the retention horizon — outside the SPI
-    *     contract (Spark's maintenance interval dwarfs a micro-batch),
-    *     same as the RocksDB checkpoint GC.
+    *     (and stats) deregistered by the PREVIOUS run. Any chain — even
+    *     one computed from a registry read racing the shrink — only
+    *     contains versions deregistered at most one run ago, whose data is
+    *     still intact, so concurrent chain reads never dangle. The
+    *     remaining exposure is a session that stays open across a FULL
+    *     maintenance cycle while reading a version below the retention
+    *     horizon — outside the SPI contract (Spark's maintenance interval
+    *     dwarfs a micro-batch), same as the RocksDB checkpoint GC.
     */
   override def doMaintenance(minVersionsToRetain: Int): Unit = registryLock.synchronized {
-    val vs = committedVersions()
+    val vs = committed()
     if (vs.isEmpty) return
+    val bs = bases()
     val earliest = math.max(vs.max - minVersionsToRetain + 1, vs.min)
-    val horizon = vs.filter(_ <= earliest).max // newest version ≤ horizon
-    if (!bases().contains(horizon)) {
-      val full = resolveAt(horizon, Array.emptyByteArray)
-      val p = versionPrefix(horizon)
+    val horizon = bs.filter(_ <= earliest).maxOption.getOrElse {
+      val h = vs.filter(_ <= earliest).max // newest version ≤ earliest
+      val full = resolve(chainOf(vs, bs, h), Array.emptyByteArray)
+      val p = versionPrefix(h)
       // (1) base entries + registry flip, one atomic batch, before any delete
-      writeVersionSet(basesKey, bases() + horizon,
-        extraPuts = full.iterator.map { case (k, v) => (p ++ k.bytes, framePut(v)) }.toSeq)
+      client.writeBatch(
+        full.iterator.map { case (k, v) => (p ++ k.bytes, framePut(v)) }.toSeq ++ Seq(
+          basesKey -> encodeVersionSet(bs + h),
+          statsKey(h) -> encodeStats(countStats(full))),
+        Seq.empty)
       // (2) now-dead delta entries: keys not in the materialization
       // (tombstones below a base). framePut overwrites already replaced
       // every live delta entry in the batch above.
       val dead = client.scanPrefix(p).map(_._1)
         .filterNot(k => full.contains(new BytesKey(strip(k, p)))).toSeq
       if (dead.nonEmpty) client.writeBatch(Seq.empty, dead)
+      h
     }
     // (3) epoch-deferred GC: physically delete what the PREVIOUS run
     // deregistered (no live chain can reference it anymore), then
@@ -444,10 +518,10 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
         Seq(gcEpochKey -> (readGcEpoch() + 1).toString.getBytes("UTF-8"))
       else Seq.empty
     client.writeBatch(epochPut ++ Seq(
-      versionsKey -> committed().filter(_ >= horizon).toSeq.sorted.mkString(",").getBytes("UTF-8"),
-      basesKey -> bases().filter(_ >= horizon).toSeq.sorted.mkString(",").getBytes("UTF-8"),
-      gcPendingKey -> newPending.toSeq.sorted.mkString(",").getBytes("UTF-8")),
-      Seq.empty)
+      versionsKey -> encodeVersionSet(committed().filter(_ >= horizon)),
+      basesKey -> encodeVersionSet(bases().filter(_ >= horizon)),
+      gcPendingKey -> encodeVersionSet(newPending)),
+      toDelete.toSeq.map(statsKey))
   }
 
   override def close(): Unit = client.close()

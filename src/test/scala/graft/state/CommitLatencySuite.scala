@@ -17,22 +17,29 @@ class CommitLatencySuite extends AnyFunSuite {
 
   private def bytes(s: String): Array[Byte] = s.getBytes("UTF-8")
 
+  /** Counts data puts per writeBatch (registry keys excluded) and
+    * scanPrefix calls. */
+  private class CountingClient(namespace: String) extends KvClient {
+    private val inner = EmbeddedKvServer.client(namespace)
+    var dataPutsPerBatch = List.empty[Int]
+    var scans = 0
+    def get(key: Array[Byte]): Array[Byte] = inner.get(key)
+    def writeBatch(puts: Seq[(Array[Byte], Array[Byte])], deletes: Seq[Array[Byte]]): Unit = {
+      dataPutsPerBatch = dataPutsPerBatch :+
+        puts.count(p => !new String(p._1, "UTF-8").contains("__"))
+      inner.writeBatch(puts, deletes)
+    }
+    def scanPrefix(prefix: Array[Byte]): Iterator[(Array[Byte], Array[Byte])] = {
+      scans += 1
+      inner.scanPrefix(prefix)
+    }
+    def deletePrefix(prefix: Array[Byte]): Unit = inner.deletePrefix(prefix)
+    def close(): Unit = inner.close()
+  }
+
   test("kv backend: per-commit data writes stay flat across versions 1..20") {
     EmbeddedKvServer.clear()
-    var dataPutsPerBatch = List.empty[Int]
-    val counting = new KvClient {
-      private val inner = EmbeddedKvServer.client("latency-test")
-      def get(key: Array[Byte]): Array[Byte] = inner.get(key)
-      def writeBatch(puts: Seq[(Array[Byte], Array[Byte])], deletes: Seq[Array[Byte]]): Unit = {
-        dataPutsPerBatch = dataPutsPerBatch :+
-          puts.count(p => !new String(p._1, "UTF-8").contains("__"))
-        inner.writeBatch(puts, deletes)
-      }
-      def scanPrefix(prefix: Array[Byte]): Iterator[(Array[Byte], Array[Byte])] =
-        inner.scanPrefix(prefix)
-      def deletePrefix(prefix: Array[Byte]): Unit = inner.deletePrefix(prefix)
-      def close(): Unit = inner.close()
-    }
+    val counting = new CountingClient("latency-test")
     // base cadence off so every commit 2..20 must be a pure delta
     val backend = new KvSessionBackend("store", counting, baseInterval = 1000)
 
@@ -45,9 +52,33 @@ class CommitLatencySuite extends AnyFunSuite {
       s.put(bytes(f"key${v}%04d"), bytes(s"update$v")) // constant delta: 1 key
       s.commit()
     }
-    val deltas = dataPutsPerBatch.filter(_ > 0).drop(1) // drop the 500-key seed
+    val deltas = counting.dataPutsPerBatch.filter(_ > 0).drop(1) // drop the 500-key seed
     assert(deltas.nonEmpty && deltas.max <= 2 * deltas.min.max(1),
       s"commit work crept across versions: $deltas")
+  }
+
+  test("kv backend: a delta commit and its stats scan nothing") {
+    EmbeddedKvServer.clear()
+    val counting = new CountingClient("stats-scan-test")
+    val backend = new KvSessionBackend("store", counting, baseInterval = 10)
+    (1 to 3).foreach { v =>
+      val s = backend.open(v - 1, v)
+      (1 to 200).foreach(i => s.put(bytes(f"key$i%04d"), bytes(s"v$v-$i")))
+      s.commit()
+    }
+    counting.scans = 0
+    // Spark's per-batch sequence on a non-base version: open, a blind put
+    // (no get first), commit, then both stats
+    val s = backend.open(3, 4)
+    s.put(bytes("key0001"), bytes("updated"))
+    s.put(bytes("new"), bytes("x"))
+    s.commit()
+    val (keys, size) = (s.numKeys, s.sizeBytes)
+    assert(counting.scans === 0,
+      s"delta commit + stats made ${counting.scans} scanPrefix calls")
+    val all = s.scan(Array.emptyByteArray).toSeq
+    assert(keys === 201 && keys === all.size)
+    assert(size === all.map { case (kk, v) => kk.length + v.length }.sum)
   }
 
   test("rocksdb backend: commit durability stays bounded across versions 1..20") {

@@ -104,6 +104,10 @@ class KvConcurrencySuite extends AnyFunSuite {
       val s = backend.open(v - 1, v); s.put(k(s"key$v"), k(s"v$v")); s.commit()
     }
 
+    // Spark sets up log4j lazily on the first log call and replaces the
+    // loggers' appenders when it does; do it now, before attaching ours,
+    // or the suite only passes when an earlier suite already logged
+    new org.apache.spark.internal.Logging { logInfo("init") }
     val captured = new java.util.concurrent.CopyOnWriteArrayList[String]()
     val appender = new AbstractAppender("kv-gc-capture", null, null, false,
         Property.EMPTY_ARRAY) {

@@ -8,10 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class KvDeltaCommitSuite extends AnyFunSuite {
 
-  /** Counts data puts per writeBatch (registry keys excluded). */
+  /** Counts data puts per writeBatch (registry keys excluded) and
+    * scanPrefix calls. */
   private class CountingClient(inner: KvClient) extends KvClient {
     var lastBatchDataPuts: Int = 0
     val batchDataPuts = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var scans = 0
     def get(key: Array[Byte]): Array[Byte] = inner.get(key)
     def writeBatch(puts: Seq[(Array[Byte], Array[Byte])], deletes: Seq[Array[Byte]]): Unit = {
       val dataPuts = puts.count { case (k, _) =>
@@ -21,8 +23,10 @@ class KvDeltaCommitSuite extends AnyFunSuite {
       batchDataPuts += dataPuts
       inner.writeBatch(puts, deletes)
     }
-    def scanPrefix(prefix: Array[Byte]): Iterator[(Array[Byte], Array[Byte])] =
+    def scanPrefix(prefix: Array[Byte]): Iterator[(Array[Byte], Array[Byte])] = {
+      scans += 1
       inner.scanPrefix(prefix)
+    }
     def deletePrefix(prefix: Array[Byte]): Unit = inner.deletePrefix(prefix)
     def close(): Unit = inner.close()
   }
@@ -96,6 +100,30 @@ class KvDeltaCommitSuite extends AnyFunSuite {
     assert(new String(s.get(k("k6")), "UTF-8") === "updated6")
     assert(new String(s.get(k("k3")), "UTF-8") === "updated3")
     assert(s.scan(Array.emptyByteArray).size === 19)
+  }
+
+  test("maintenance GCs up to an existing cadence base without materializing one") {
+    EmbeddedKvServer.clear()
+    val client = new CountingClient(EmbeddedKvServer.client("cadence-gc-test"))
+    val backend = new KvSessionBackend("store", client, baseInterval = 5)
+    (1 to 12).foreach { v =>
+      val s = backend.open(v - 1, v)
+      s.put(k(s"k$v"), k(s"v$v"))
+      if (v == 7) s.remove(k("k1"))
+      s.commit()
+    }
+    client.scans = 0
+    client.batchDataPuts.clear()
+    backend.doMaintenance(minVersionsToRetain = 4)
+    // the oldest version to retain is 9; base 5 is the newest base at or
+    // below it, so GC stops there — no scan, no data written
+    assert(backend.committedVersions() === (5L to 12L))
+    assert(client.scans === 0 && client.batchDataPuts.sum === 0,
+      s"maintenance scanned ${client.scans} prefixes, wrote ${client.batchDataPuts}")
+    val s = backend.open(12, 13)
+    assert(s.get(k("k1")) === null)
+    assert(new String(s.get(k("k2")), "UTF-8") === "v2")
+    assert(s.scan(Array.emptyByteArray).size === 11)
   }
 
   test("re-committing a version removes the earlier attempt's stale keys") {
@@ -228,16 +256,16 @@ class KvDeltaCommitSuite extends AnyFunSuite {
     assert(new String(r.get(k("keep")), "UTF-8") === "v3")
   }
 
-  test("stats stay fresh after an overwrite-in-place (mutation-counter invalidation)") {
+  test("stats stay fresh after an overwrite-in-place") {
     EmbeddedKvServer.clear()
     val client = EmbeddedKvServer.client("stats-test")
     val backend = new KvSessionBackend("store", client, baseInterval = 1000)
     val s = backend.open(0, 1)
     s.put(k("a"), k("xx"))
-    assert(s.numKeys === 1)        // primes the stats cache
+    assert(s.numKeys === 1)
     val bytesBefore = s.sizeBytes
     // overwrite IN PLACE: numKeys and overlay.size are unchanged, only the
-    // value bytes grow — a size-keyed cache would serve both stats stale
+    // value bytes grow — stats keyed on either would be served stale
     s.put(k("a"), k("xxxxxxxxxx"))
     assert(s.numKeys === 1)
     assert(s.sizeBytes === bytesBefore + 8,
@@ -248,5 +276,106 @@ class KvDeltaCommitSuite extends AnyFunSuite {
     s.put(k("a"), k("yy"))
     assert(s.numKeys === 1 && s.sizeBytes === bytesBefore)
     s.commit()
+  }
+
+  /** (numKeys, sizeBytes) as a full scan of `s` counts them. */
+  private def scanned(s: StoreSession): (Long, Long) = {
+    val it = s.scan(Array.emptyByteArray)
+    try it.foldLeft((0L, 0L)) { case ((n, b), (kk, v)) => (n + 1, b + kk.length + v.length) }
+    finally it.close()
+  }
+
+  test("stats stay exact through random commits, a replay, maintenance and a reopen") {
+    EmbeddedKvServer.clear()
+    val client = EmbeddedKvServer.client("stats-random-test")
+    var backend = new KvSessionBackend("store", client, baseInterval = 7)
+    val rnd = new scala.util.Random(20261017)
+    def anyKey(): String = f"k${rnd.nextInt(40)}%02d"
+    def anyValue(): String = rnd.alphanumeric.take(1 + rnd.nextInt(12)).mkString
+    def read(s: StoreSession, key: String): Option[String] =
+      Option(s.get(k(key))).map(new String(_, "UTF-8"))
+
+    /** A random batch on `s` (puts with and without a prior get,
+      * overwrites, removes of present and absent keys), mirrored on `m`. */
+    def runBatch(s: StoreSession, m0: Map[String, String]): Map[String, String] = {
+      var m = m0
+      (1 to 1 + rnd.nextInt(12)).foreach { _ =>
+        val key = anyKey()
+        rnd.nextInt(4) match {
+          case 0 =>
+            assert(read(s, key) === m.get(key))
+            val v = anyValue(); s.put(k(key), k(v)); m += key -> v
+          case 1 => val v = anyValue(); s.put(k(key), k(v)); m += key -> v
+          case 2 => s.remove(k(key)); m -= key
+          case _ =>
+            assert(read(s, key) === m.get(key))
+            s.remove(k(key)); m -= key
+        }
+      }
+      m
+    }
+
+    /** The session resolves to `m`, and its stats equal a full scan. */
+    def check(s: StoreSession, m: Map[String, String], step: String): Unit = {
+      val state = s.scan(Array.emptyByteArray)
+        .map { case (kk, v) => new String(kk, "UTF-8") -> new String(v, "UTF-8") }.toMap
+      assert(state === m, s"$step: state diverged")
+      assert((s.numKeys, s.sizeBytes) === scanned(s), s"$step: stats differ from a full scan")
+    }
+
+    var model = Map.empty[String, String]
+    (1 to 30).foreach { v =>
+      // a fresh backend instance over the same server: stats come from the KV
+      if (v == 20) backend = new KvSessionBackend("store", client, baseInterval = 7)
+      val s = backend.open(v - 1, v)
+      val m = runBatch(s, model)
+      if (v % 3 == 0) check(s, m, s"v$v before commit")
+      s.commit()
+      check(s, m, s"v$v after commit")
+      if (v == 12) {
+        // replay v12 with a different delta over the same parent
+        val replay = backend.open(11, 12)
+        model = runBatch(replay, model)
+        replay.commit()
+        check(replay, model, "v12 replayed")
+      } else model = m
+      check(backend.open(v, v + 1), model, s"v$v reopened")
+      if (v % 4 == 0) {
+        backend.doMaintenance(3)
+        check(backend.open(v, v + 1), model, s"v$v after maintenance")
+      }
+    }
+    assert(backend.committedVersions().size < 30, "maintenance never GC'd")
+  }
+
+  test("a checkpoint written before per-version stats still reports exact stats") {
+    EmbeddedKvServer.clear()
+    val client = EmbeddedKvServer.client("stats-legacy-test")
+    val backend = new KvSessionBackend("store", client, baseInterval = 1000)
+    (1 to 4).foreach { v =>
+      val s = backend.open(v - 1, v)
+      s.put(k(s"k$v"), k("v" * v))
+      if (v == 3) s.remove(k("k1"))
+      s.commit()
+    }
+    // strip the stats keys, as a checkpoint from before they existed has none
+    val statsKeys = client.scanPrefix(k("store:__stats__:")).map(_._1).toSeq
+    assert(statsKeys.size === 4)
+    client.writeBatch(Seq.empty, statsKeys)
+
+    val s5 = backend.open(4, 5)
+    assert((s5.numKeys, s5.sizeBytes) === (3L, 15L)) // k2→vv, k3→vvv, k4→vvvv
+    s5.put(k("k5"), k("vvvvv"))
+    s5.remove(k("k2"))
+    s5.commit()
+    assert((s5.numKeys, s5.sizeBytes) === scanned(s5))
+    // the new version carries its stats again
+    val s6 = backend.open(5, 6)
+    assert((s6.numKeys, s6.sizeBytes) === (3L, 18L))
+    // the base maintenance materializes at v4 gets its stats back
+    backend.doMaintenance(minVersionsToRetain = 2)
+    assert(client.get(k("store:__stats__:4")) !== null)
+    val s7 = backend.open(4, 5)
+    assert((s7.numKeys, s7.sizeBytes) === (3L, 15L))
   }
 }
