@@ -150,22 +150,70 @@ final class RocksDbSessionBackend(
     } finally out.close()
   }
 
-  private def applyChangelog(db: RocksDB, version: Long): Unit = {
+  /** Replays one version's changelog into `db`, all or nothing: the
+    * whole file is parsed before the first write, so a changelog cut off
+    * inside a record throws without leaving part of its version behind. */
+  private def applyChangelog(db: RocksDB, version: Long): Unit =
+    changelogRecords(version).foreach { case (k, v) =>
+      if (v == null) db.delete(k) else db.put(k, v)
+    }
+
+  /** The raw (physicalKey, valueOrNull) records of one version's
+    * changelog, strictly (missing/corrupt file throws) — the replay
+    * source and the backing for the provider's change-data reader.
+    */
+  private[state] def changelogRecords(version: Long): Iterator[(Array[Byte], Array[Byte])] = {
     val in = new java.io.DataInputStream(new BufferedInputStream(
       fs.open(new Path(basePath, changelogFileName(version)))))
+    val buf = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Array[Byte])]
     try {
       var op = in.read()
       while (op >= 0) {
         val k = new Array[Byte](in.readInt()); in.readFully(k)
         if (op == 0) {
           val v = new Array[Byte](in.readInt()); in.readFully(v)
-          db.put(k, v)
-        } else {
-          db.delete(k)
-        }
+          buf += ((k, v))
+        } else buf += ((k, null))
         op = in.read()
       }
     } finally in.close()
+    // materialized: a changelog is one micro-batch's delta, bounded by
+    // design, and a replay must not start on a file it cannot finish
+    buf.iterator
+  }
+
+  /** A prefix scan over `db` (an empty prefix scans everything) whose
+    * native RocksIterator closes when the scan is drained or closed. An
+    * open scan stays in `openScans` so its session can close it before
+    * any DB teardown.
+    */
+  private def scanDb(db: RocksDB, prefix: Array[Byte],
+                     openScans: java.util.Set[KvScanIterator]): KvScanIterator = {
+    val it = db.newIterator()
+    if (prefix.isEmpty) it.seekToFirst() else it.seek(prefix)
+    val scanIt: KvScanIterator = new KvScanIterator {
+      private var done = false
+      private def check(): Unit =
+        if (!done && !(it.isValid &&
+          (prefix.isEmpty || ByteOrdering.hasPrefix(it.key(), prefix)))) {
+          close()
+        }
+      check()
+      def hasNext: Boolean = !done
+      def next(): (Array[Byte], Array[Byte]) = {
+        val kv = (it.key().clone(), it.value().clone())
+        it.next()
+        check()
+        kv
+      }
+      def close(): Unit = if (!done) {
+        done = true
+        it.close()
+        openScans.remove(this)
+      }
+    }
+    if (scanIt.hasNext) openScans.add(scanIt)
+    scanIt
   }
 
   // ----- load ladder --------------------------------------------------------
@@ -259,9 +307,7 @@ final class RocksDbSessionBackend(
       // scans whose native RocksIterator is still open — a handle that
       // outlives the DB (close with live iterators) can crash the JVM, so
       // commit/abort drain this set before any DB teardown can follow
-      private val openScans =
-        java.util.Collections.newSetFromMap(
-          new ConcurrentHashMap[KvScanIterator, java.lang.Boolean]())
+      private val openScans = ConcurrentHashMap.newKeySet[KvScanIterator]()
 
       private def closeOpenScans(): Unit = {
         openScans.asScala.toSeq.foreach(s => Try(s.close()))
@@ -276,33 +322,7 @@ final class RocksDbSessionBackend(
         dirty = true; changes += ((key, null)); db.delete(key)
       }
 
-      def scan(prefix: Array[Byte]): KvScanIterator = {
-        val it = db.newIterator()
-        if (prefix.isEmpty) it.seekToFirst() else it.seek(prefix)
-        val scanIt: KvScanIterator = new KvScanIterator {
-          private var done = false
-          private def check(): Unit =
-            if (!done && !(it.isValid &&
-              (prefix.isEmpty || ByteOrdering.hasPrefix(it.key(), prefix)))) {
-              close()
-            }
-          check()
-          def hasNext: Boolean = !done
-          def next(): (Array[Byte], Array[Byte]) = {
-            val kv = (it.key().clone(), it.value().clone())
-            it.next()
-            check()
-            kv
-          }
-          def close(): Unit = if (!done) {
-            done = true
-            it.close()
-            openScans.remove(this)
-          }
-        }
-        if (scanIt.hasNext) openScans.add(scanIt)
-        scanIt
-      }
+      def scan(prefix: Array[Byte]): KvScanIterator = scanDb(db, prefix, openScans)
 
       private var durabilityMs = 0L
 
@@ -382,9 +402,7 @@ final class RocksDbSessionBackend(
 
     new StoreSession {
       private var closed = false
-      private val openScans =
-        java.util.Collections.newSetFromMap(
-          new ConcurrentHashMap[KvScanIterator, java.lang.Boolean]())
+      private val openScans = ConcurrentHashMap.newKeySet[KvScanIterator]()
 
       def get(key: Array[Byte]): Array[Byte] = db.get(key)
       def put(key: Array[Byte], value: Array[Byte]): Unit =
@@ -394,33 +412,7 @@ final class RocksDbSessionBackend(
       def commit(): Unit =
         throw new UnsupportedOperationException("replay session is read-only")
 
-      def scan(prefix: Array[Byte]): KvScanIterator = {
-        val it = db.newIterator()
-        if (prefix.isEmpty) it.seekToFirst() else it.seek(prefix)
-        val scanIt: KvScanIterator = new KvScanIterator {
-          private var done = false
-          private def check(): Unit =
-            if (!done && !(it.isValid &&
-              (prefix.isEmpty || ByteOrdering.hasPrefix(it.key(), prefix)))) {
-              close()
-            }
-          check()
-          def hasNext: Boolean = !done
-          def next(): (Array[Byte], Array[Byte]) = {
-            val kv = (it.key().clone(), it.value().clone())
-            it.next()
-            check()
-            kv
-          }
-          def close(): Unit = if (!done) {
-            done = true
-            it.close()
-            openScans.remove(this)
-          }
-        }
-        if (scanIt.hasNext) openScans.add(scanIt)
-        scanIt
-      }
+      def scan(prefix: Array[Byte]): KvScanIterator = scanDb(db, prefix, openScans)
 
       def abort(): Unit = if (!closed) {
         closed = true
@@ -435,30 +427,6 @@ final class RocksDbSessionBackend(
       def sizeBytes: Long =
         db.getProperty("rocksdb.cur-size-all-mem-tables").toLong
     }
-  }
-
-  /** The raw (physicalKey, valueOrNull) records of one version's
-    * changelog, strictly (missing/corrupt file throws) — the backing for
-    * the provider's change-data reader.
-    */
-  private[state] def changelogRecords(version: Long): Iterator[(Array[Byte], Array[Byte])] = {
-    val in = new java.io.DataInputStream(new BufferedInputStream(
-      fs.open(new Path(basePath, changelogFileName(version)))))
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Array[Byte])]
-    try {
-      var op = in.read()
-      while (op >= 0) {
-        val k = new Array[Byte](in.readInt()); in.readFully(k)
-        if (op == 0) {
-          val v = new Array[Byte](in.readInt()); in.readFully(v)
-          buf += ((k, v))
-        } else buf += ((k, null))
-        op = in.read()
-      }
-    } finally in.close()
-    // materialized: a changelog is one micro-batch's delta, bounded by
-    // design; holding the stream open across lazy consumption is not
-    buf.iterator
   }
 
   // ----- maintenance --------------------------------------------------------

@@ -115,10 +115,7 @@ object StreamingAsOfJoin {
     val b = build.select(col(key).cast("long").as("key"),
       col(ord).cast("long").as("ord"), lit(false).as("isProbe"),
       lit(0L).as("id"), col(buildVal).cast("long").as("bval"))
-    val (ttlConf, timeMode) = ttl match {
-      case Some(d) => (TTLConfig(d), TimeMode.ProcessingTime())
-      case None    => (TTLConfig.NONE, TimeMode.None())
-    }
+    val (ttlConf, timeMode) = StateTtl(ttl)
     p.unionByName(b).as[AsOfEvent]
       .groupByKey(_.key)
       .transformWithState(new AsOfProcessor(tolerance, ttlConf),

@@ -69,7 +69,7 @@ object StreamingAttribution {
     * event, so a stale click expires at the horizon even for an entity
     * that stays active with target-type events. A finite TTL switches the
     * query to `TimeMode.ProcessingTime` — Spark rejects TTL'd state in
-    * `TimeMode.None` (same pattern as [[StreamingDedup.nearDupStream]]).
+    * `TimeMode.None` (see [[StateTtl]]).
     */
   def lastTouchStream(events: DataFrame, targetType: String, sourceType: String,
                       ttl: Option[java.time.Duration] = None): Dataset[Attribution] = {
@@ -77,10 +77,7 @@ object StreamingAttribution {
       "lastTouchStream: target and source types must differ")
     val spark = events.sparkSession
     import spark.implicits._
-    val (ttlConf, timeMode) = ttl match {
-      case Some(d) => (TTLConfig(d), TimeMode.ProcessingTime())
-      case None    => (TTLConfig.NONE, TimeMode.None())
-    }
+    val (ttlConf, timeMode) = StateTtl(ttl)
     events.select(col("user_id").as("userId"), col("event_id").as("eventId"),
         col("event_type").as("eventType"))
       .as[AttrEvent]

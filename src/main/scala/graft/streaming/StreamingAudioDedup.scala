@@ -41,43 +41,6 @@ object StreamingAudioDedup {
   case class FpMember(docId: Long, fp: Long)
   case class AudioPair(docA: Long, docB: Long, hamming: Long)
 
-  /** Per-(band, bval) processor: popcount-hamming compare-then-join
-    * against bucket members over the 32-bit fingerprint word — the same
-    * arithmetic as the batch operator and its SQL oracle. */
-  class FpBucketProcessor(maxHamming: Int, maxBucketSize: Int,
-                          ttl: TTLConfig)
-      extends StatefulProcessor[(Int, Long), BandedFp, AudioPair] {
-    @transient private var members: ListState[FpMember] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      members = getHandle.getListState[FpMember]("members",
-        Encoders.product[FpMember], ttl)
-
-    override def handleInputRows(key: (Int, Long), rows: Iterator[BandedFp],
-                                 timerValues: TimerValues): Iterator[AudioPair] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[AudioPair]
-      rows.foreach { h =>
-        // materialize-first admission bound: a full bucket skips the
-        // hamming math entirely
-        val current = members.get().toArray
-        if (current.length < maxBucketSize) {
-          current.foreach { m =>
-            if (m.docId != h.docId) {
-              val d = java.lang.Long.bitCount(h.fp ^ m.fp)
-              if (d <= maxHamming) {
-                val (a, b) =
-                  if (h.docId < m.docId) (h.docId, m.docId) else (m.docId, h.docId)
-                out += AudioPair(a, b, d.toLong)
-              }
-            }
-          }
-          members.appendValue(FpMember(h.docId, h.fp))
-        }
-      }
-      out.iterator
-    }
-  }
-
   /** Near-dup audio pairs of a streaming fingerprint frame (columns
     * `doc_id`, `fingerprint`), emitted incrementally.
     *
@@ -96,13 +59,19 @@ object StreamingAudioDedup {
           .as(Seq("band", "bval")),
         col("doc_id").as("docId"), col("fingerprint").as("fp"))
       .as[BandedFp]
-    val (ttlConf, timeMode) = ttl match {
-      case Some(d) => (TTLConfig(d), TimeMode.ProcessingTime())
-      case None    => (TTLConfig.NONE, TimeMode.None())
-    }
+    val (ttlConf, timeMode) = StateTtl(ttl)
     banded.groupByKey(h => (h.band, h.bval))
       .transformWithState(
-        new FpBucketProcessor(maxHamming, maxBucketSize, ttlConf),
+        // popcount hamming over the 32-bit fingerprint word — the same
+        // arithmetic as the batch operator and its SQL oracle
+        new BandBucketProcessor[BandedFp, FpMember, AudioPair](
+          maxBucketSize, ttlConf, Encoders.product[FpMember],
+          h => FpMember(h.docId, h.fp), _.docId, (h, m) => {
+            val d = java.lang.Long.bitCount(h.fp ^ m.fp)
+            if (d > maxHamming) None
+            else if (h.docId < m.docId) Some(AudioPair(h.docId, m.docId, d.toLong))
+            else Some(AudioPair(m.docId, h.docId, d.toLong))
+          }),
         timeMode, OutputMode.Append())
   }
 }

@@ -116,10 +116,7 @@ object StreamingCdcDedup {
           digests.iterator.map(dg => DigestDoc(dg, id, digests.length.toLong))
         }
       }
-    val (ttlConf, timeMode) = ttl match {
-      case Some(d) => (TTLConfig(d), TimeMode.ProcessingTime())
-      case None    => (TTLConfig.NONE, TimeMode.None())
-    }
+    val (ttlConf, timeMode) = StateTtl(ttl)
     keyed.groupByKey(_.digest)
       .transformWithState(new DigestProcessor(maxBucketSize, ttlConf),
         timeMode, OutputMode.Append())

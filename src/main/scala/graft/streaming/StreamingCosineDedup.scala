@@ -42,63 +42,36 @@ object StreamingCosineDedup {
   case class VecMember(vecId: Long, v: Seq[Double])
   case class CosinePair(vecA: Long, vecB: Long, cosSim: Double)
 
-  /** Per-(table, bucket) processor: exact-cosine compare-then-join
-    * against bucket members. Membership counted from the live list (TTL
-    * expires members individually — a persisted counter would wedge a
-    * "full" bucket of expired members; same reasoning as
-    * [[StreamingDedup.BucketProcessor]]).
-    */
-  class CosineBucketProcessor(threshold: Double, maxBucketSize: Int,
-                              ttl: TTLConfig)
-      extends StatefulProcessor[(Int, Long), BandedVec, CosinePair] {
-    @transient private var members: ListState[VecMember] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      members = getHandle.getListState[VecMember]("members",
-        Encoders.product[VecMember], ttl)
-
-    private def cosine(a: Seq[Double], b: Seq[Double]): Double = {
-      // a dimension mismatch is an upstream schema slip — fail LOUDLY
-      // rather than fabricate a similarity from a truncated dot product
-      require(a.length == b.length,
-        s"cosinePairsStream: dimension mismatch ${a.length} vs ${b.length}")
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
-      }
-      // zero-norm guard: a zero vector has no direction — below any
-      // threshold (batch safeCosine's -2.0 sentinel)
-      if (na == 0.0 || nb == 0.0) -2.0 else dot / math.sqrt(na * nb)
+  private def cosine(a: Seq[Double], b: Seq[Double]): Double = {
+    // a dimension mismatch is an upstream schema slip — fail LOUDLY
+    // rather than fabricate a similarity from a truncated dot product
+    require(a.length == b.length,
+      s"cosinePairsStream: dimension mismatch ${a.length} vs ${b.length}")
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < a.length) {
+      dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
     }
-
-    override def handleInputRows(key: (Int, Long), rows: Iterator[BandedVec],
-                                 timerValues: TimerValues): Iterator[CosinePair] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[CosinePair]
-      rows.foreach { vec =>
-        // materialize first (bounded by maxBucketSize): a FULL bucket is
-        // skipped before any cosine math — the hot-bucket path is where
-        // O(bucket × dim) wasted work would concentrate
-        val current = members.get().toArray
-        if (current.length < maxBucketSize) {
-          current.foreach { m =>
-            if (m.vecId != vec.vecId) {
-              val cos = cosine(vec.v, m.v)
-              if (cos >= threshold) {
-                val (a, b) =
-                  if (vec.vecId < m.vecId) (vec.vecId, m.vecId) else (m.vecId, vec.vecId)
-                // round as batch does (cos_sim = round(cos, 6)) so the
-                // streamed pair is value-identical to cosinePairsLsh's
-                out += CosinePair(a, b,
-                  BigDecimal(cos).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-              }
-            }
-          }
-          members.appendValue(VecMember(vec.vecId, vec.v))
-        }
-      }
-      out.iterator
-    }
+    // zero-norm guard: a zero vector has no direction — below any
+    // threshold (batch safeCosine's -2.0 sentinel)
+    if (na == 0.0 || nb == 0.0) -2.0 else dot / math.sqrt(na * nb)
   }
+
+  /** The bucket processor of [[cosinePairsStream]] and
+    * [[semDeDupStream]]: exact cosine against each bucket member. */
+  private def cosineBuckets(threshold: Double, maxBucketSize: Int, ttl: TTLConfig) =
+    new BandBucketProcessor[BandedVec, VecMember, CosinePair](
+      maxBucketSize, ttl, Encoders.product[VecMember],
+      v => VecMember(v.vecId, v.v), _.vecId, (vec, m) => {
+        val cos = cosine(vec.v, m.v)
+        if (cos >= threshold) {
+          val (a, b) =
+            if (vec.vecId < m.vecId) (vec.vecId, m.vecId) else (m.vecId, vec.vecId)
+          // round as batch does (cos_sim = round(cos, 6)) so the
+          // streamed pair is value-identical to cosinePairsLsh's
+          Some(CosinePair(a, b,
+            BigDecimal(cos).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
+        } else None
+      })
 
   /** Cosine near-dup pairs of a streaming `embeddings` frame (columns
     * `vec_id`, `embedding`), emitted incrementally as vectors arrive.
@@ -122,13 +95,9 @@ object StreamingCosineDedup {
           .as(Seq("tbl", "bucket")),
         col("vec_id").as("vecId"), col("v"))
       .as[BandedVec]
-    val (ttlConf, timeMode) = ttl match {
-      case Some(d) => (TTLConfig(d), TimeMode.ProcessingTime())
-      case None    => (TTLConfig.NONE, TimeMode.None())
-    }
+    val (ttlConf, timeMode) = StateTtl(ttl)
     banded.groupByKey(d => (d.tbl, d.bucket))
-      .transformWithState(
-        new CosineBucketProcessor(threshold, maxBucketSize, ttlConf),
+      .transformWithState(cosineBuckets(threshold, maxBucketSize, ttlConf),
         timeMode, OutputMode.Append())
   }
 
@@ -163,13 +132,9 @@ object StreamingCosineDedup {
           .cast("long").as("bucket"),
         col("vec_id").as("vecId"), col("v"))
       .as[BandedVec]
-    val (ttlConf, timeMode) = ttl match {
-      case Some(d) => (TTLConfig(d), TimeMode.ProcessingTime())
-      case None    => (TTLConfig.NONE, TimeMode.None())
-    }
+    val (ttlConf, timeMode) = StateTtl(ttl)
     assigned.groupByKey(d => (d.tbl, d.bucket))
-      .transformWithState(
-        new CosineBucketProcessor(threshold, maxClusterSize, ttlConf),
+      .transformWithState(cosineBuckets(threshold, maxClusterSize, ttlConf),
         timeMode, OutputMode.Append())
   }
 }

@@ -46,57 +46,22 @@ object StreamingDedup {
   case class Member(docId: Long, sig: Seq[Long])
   case class NearDupPair(docA: Long, docB: Long, estJaccard: Double)
 
-  /** Per-(band, bucket) processor: compare-then-join against bucket
-    * members. Emits each qualifying pair with the MinHash Jaccard
-    * estimate (share of equal signature lanes — same verify as batch).
-    *
-    * Membership is counted from the live list on every arrival rather
-    * than a separate counter: with a TTL, ListState elements expire
-    * INDIVIDUALLY, so a persisted count would go stale and permanently
-    * wedge a "full" bucket whose members have long expired. The count
-    * rides the same iteration the comparisons already need.
-    */
-  class BucketProcessor(threshold: Double, nHashes: Int, maxBucketSize: Int,
-                        ttl: TTLConfig)
-      extends StatefulProcessor[(Int, Long), BandedDoc, NearDupPair] {
-    @transient private var members: ListState[Member] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      members = getHandle.getListState[Member]("members",
-        Encoders.product[Member], ttl)
-
-    override def handleInputRows(key: (Int, Long), rows: Iterator[BandedDoc],
-                                 timerValues: TimerValues): Iterator[NearDupPair] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[NearDupPair]
-      rows.foreach { doc =>
-        // a full bucket admits no more members and emits nothing:
-        // degenerate buckets stop generating O(n²) pairs, mirroring the
-        // batch skew guard. Materialize-first (bounded by maxBucketSize)
-        // so the full-bucket path skips the signature comparisons
-        // entirely instead of computing then discarding them.
-        val current = members.get().toArray
-        if (current.length < maxBucketSize) {
-          current.foreach { m =>
-            if (m.docId != doc.docId) {
-              var eq = 0
-              var i = 0
-              while (i < nHashes) {
-                if (doc.sig(i) == m.sig(i)) eq += 1
-                i += 1
-              }
-              val est = eq.toDouble / nHashes
-              if (est >= threshold) {
-                val (a, b) =
-                  if (doc.docId < m.docId) (doc.docId, m.docId) else (m.docId, doc.docId)
-                out += NearDupPair(a, b, est)
-              }
-            }
-          }
-          members.appendValue(Member(doc.docId, doc.sig))
-        }
-      }
-      out.iterator
+  /** MinHash Jaccard estimate (share of equal signature lanes — the same
+    * verify as batch) of an arrival against a bucket member, oriented
+    * `docA < docB`, when it reaches `threshold`. */
+  private def jaccardPair(threshold: Double, nHashes: Int)(
+      doc: Member, m: Member): Option[NearDupPair] = {
+    var eq = 0
+    var i = 0
+    while (i < nHashes) {
+      if (doc.sig(i) == m.sig(i)) eq += 1
+      i += 1
     }
+    val est = eq.toDouble / nHashes
+    if (est >= threshold) Some(
+      if (doc.docId < m.docId) NearDupPair(doc.docId, m.docId, est)
+      else NearDupPair(m.docId, doc.docId, est))
+    else None
   }
 
   /** Near-dup pairs of a streaming `docs` frame (columns `doc_id`,
@@ -126,13 +91,12 @@ object StreamingDedup {
         }: _*)).as(Seq("band", "bucket")),
         col("doc_id").as("docId"), col("sig"))
       .as[BandedDoc]
-    val (ttlConf, timeMode) = ttl match {
-      case Some(d) => (TTLConfig(d), TimeMode.ProcessingTime())
-      case None    => (TTLConfig.NONE, TimeMode.None())
-    }
+    val (ttlConf, timeMode) = StateTtl(ttl)
     banded.groupByKey(d => (d.band, d.bucket))
       .transformWithState(
-        new BucketProcessor(threshold, nHashes, maxBucketSize, ttlConf),
+        new BandBucketProcessor[BandedDoc, Member, NearDupPair](
+          maxBucketSize, ttlConf, Encoders.product[Member],
+          d => Member(d.docId, d.sig), _.docId, jaccardPair(threshold, nHashes)),
         timeMode, OutputMode.Append())
   }
 }

@@ -51,24 +51,32 @@ object StreamingDupGrams {
     override def handleInputRows(key: Long, rows: Iterator[GramOcc],
                                  timerValues: TimerValues): Iterator[DupPos] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[DupPos]
+      // one read of each state per key per batch; the local mirrors
+      // absorb the per-row updates instead of re-decoding up to
+      // `maxPending` held occurrences for every input row
+      var isDup = dup.exists() && dup.get()
+      val held = scala.collection.mutable.ArrayBuffer.empty[DupPos]
+      if (!isDup) held ++= pending.get()
       rows.foreach { o =>
-        if (dup.exists() && dup.get()) {
+        if (isDup) {
           out += DupPos(o.docId, o.pos) // already duplicated: emit-through
-        } else {
-          val held = pending.get().toArray
-          if (held.isEmpty || held.forall(_.docId == o.docId)) {
-            // still single-doc: hold back (bounded — a same-doc flood
-            // can never fire the crossing, so dropping its tail is safe)
-            if (held.length < maxPending)
-              pending.appendValue(DupPos(o.docId, o.pos))
-          } else {
-            // SECOND distinct doc: the gram just became duplicated —
-            // release everything held, emit the arrival, flip the flag
-            held.foreach(out += _)
-            out += DupPos(o.docId, o.pos)
-            dup.update(true)
-            pending.clear()
+        } else if (held.isEmpty || held.head.docId == o.docId) {
+          // still single-doc (everything held is one doc's): hold back
+          // (bounded — a same-doc flood can never fire the crossing, so
+          // dropping its tail is safe)
+          if (held.length < maxPending) {
+            pending.appendValue(DupPos(o.docId, o.pos))
+            held += DupPos(o.docId, o.pos)
           }
+        } else {
+          // SECOND distinct doc: the gram just became duplicated —
+          // release everything held, emit the arrival, flip the flag
+          out ++= held
+          out += DupPos(o.docId, o.pos)
+          dup.update(true)
+          pending.clear()
+          held.clear()
+          isDup = true
         }
       }
       out.iterator

@@ -33,45 +33,6 @@ object StreamingImageDedup {
   case class HashMember(docId: Long, hi: Long, lo: Long)
   case class ImagePair(docA: Long, docB: Long, hamming: Long)
 
-  /** Per-(band, bval) processor: popcount-hamming compare-then-join
-    * against bucket members, on the 32-bit halves (never a 64-bit word —
-    * same arithmetic as the batch operator and its SQL oracle).
-    */
-  class HashBucketProcessor(maxHamming: Int, maxBucketSize: Int,
-                            ttl: TTLConfig)
-      extends StatefulProcessor[(Int, Long), BandedHash, ImagePair] {
-    @transient private var members: ListState[HashMember] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      members = getHandle.getListState[HashMember]("members",
-        Encoders.product[HashMember], ttl)
-
-    override def handleInputRows(key: (Int, Long), rows: Iterator[BandedHash],
-                                 timerValues: TimerValues): Iterator[ImagePair] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[ImagePair]
-      rows.foreach { h =>
-        // materialize-first admission bound, as in StreamingDedup: a
-        // full bucket skips the hamming math entirely
-        val current = members.get().toArray
-        if (current.length < maxBucketSize) {
-          current.foreach { m =>
-            if (m.docId != h.docId) {
-              val d = java.lang.Long.bitCount(h.hi ^ m.hi) +
-                java.lang.Long.bitCount(h.lo ^ m.lo)
-              if (d <= maxHamming) {
-                val (a, b) =
-                  if (h.docId < m.docId) (h.docId, m.docId) else (m.docId, h.docId)
-                out += ImagePair(a, b, d.toLong)
-              }
-            }
-          }
-          members.appendValue(HashMember(h.docId, h.hi, h.lo))
-        }
-      }
-      out.iterator
-    }
-  }
-
   /** Near-dup image pairs of a streaming fingerprint frame (columns
     * `doc_id`, `dhash_hi`, `dhash_lo`), emitted incrementally. Bands are
     * the same 4×16-bit split as the batch operator, so a stream replay
@@ -100,13 +61,20 @@ object StreamingImageDedup {
         col("doc_id").as("docId"),
         col("dhash_hi").as("hi"), col("dhash_lo").as("lo"))
       .as[BandedHash]
-    val (ttlConf, timeMode) = ttl match {
-      case Some(d) => (TTLConfig(d), TimeMode.ProcessingTime())
-      case None    => (TTLConfig.NONE, TimeMode.None())
-    }
+    val (ttlConf, timeMode) = StateTtl(ttl)
     banded.groupByKey(h => (h.band, h.bval))
       .transformWithState(
-        new HashBucketProcessor(maxHamming, maxBucketSize, ttlConf),
+        // popcount hamming on the 32-bit halves (never a 64-bit word —
+        // same arithmetic as the batch operator and its SQL oracle)
+        new BandBucketProcessor[BandedHash, HashMember, ImagePair](
+          maxBucketSize, ttlConf, Encoders.product[HashMember],
+          h => HashMember(h.docId, h.hi, h.lo), _.docId, (h, m) => {
+            val d = java.lang.Long.bitCount(h.hi ^ m.hi) +
+              java.lang.Long.bitCount(h.lo ^ m.lo)
+            if (d > maxHamming) None
+            else if (h.docId < m.docId) Some(ImagePair(h.docId, m.docId, d.toLong))
+            else Some(ImagePair(m.docId, h.docId, d.toLong))
+          }),
         timeMode, OutputMode.Append())
   }
 }

@@ -46,48 +46,6 @@ object StreamingVideoDedup {
   case class FrameMatch(docA: Long, frameA: Int, docB: Long, nKeyA: Int)
   case class ClipPair(docA: Long, docB: Long, nMatched: Int, nKeyA: Int)
 
-  /** Stage 1: per-(band, bval) keyframe index — hamming compare against
-    * bucket members of OTHER clips, then join the bucket. */
-  class FrameBucketProcessor(maxHamming: Int, maxBucketSize: Int,
-                             ttl: TTLConfig)
-      extends StatefulProcessor[(Int, Long), BandedFrame, FrameMatch] {
-    @transient private var members: ListState[FrameMember] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      members = getHandle.getListState[FrameMember]("members",
-        Encoders.product[FrameMember], ttl)
-
-    override def handleInputRows(key: (Int, Long), rows: Iterator[BandedFrame],
-                                 timerValues: TimerValues): Iterator[FrameMatch] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[FrameMatch]
-      // read the bucket ONCE per key per batch and mirror appends in the
-      // local buffer (so same-batch arrivals still pair with each other)
-      // instead of re-deserializing the full list per input row
-      val buf = scala.collection.mutable.ArrayBuffer.empty[FrameMember]
-      buf ++= members.get()
-      rows.foreach { h =>
-        if (buf.length < maxBucketSize) {
-          buf.foreach { m =>
-            if (m.docId != h.docId) {
-              val d = java.lang.Long.bitCount(h.hi ^ m.hi) +
-                java.lang.Long.bitCount(h.lo ^ m.lo)
-              if (d <= maxHamming) {
-                out += (if (h.docId < m.docId)
-                  FrameMatch(h.docId, h.frameIdx, m.docId, h.nKey)
-                else
-                  FrameMatch(m.docId, m.frameIdx, h.docId, m.nKey))
-              }
-            }
-          }
-          val added = FrameMember(h.docId, h.frameIdx, h.hi, h.lo, h.nKey)
-          members.appendValue(added)
-          buf += added
-        }
-      }
-      out.iterator
-    }
-  }
-
   /** Stage 2: per-(clip pair) threshold crossing — distinct matched
     * a-side frames accumulate (a pair colliding in several bands arrives
     * several times; the list dedups it), and the pair emits exactly once
@@ -147,13 +105,20 @@ object StreamingVideoDedup {
         col("dhash_hi").as("hi"), col("dhash_lo").as("lo"),
         col("n_key").cast("int").as("nKey"))
       .as[BandedFrame]
-    val (ttlConf, timeMode) = ttl match {
-      case Some(d) => (TTLConfig(d), TimeMode.ProcessingTime())
-      case None    => (TTLConfig.NONE, TimeMode.None())
-    }
+    val (ttlConf, timeMode) = StateTtl(ttl)
     banded.groupByKey(h => (h.band, h.bval))
       .transformWithState(
-        new FrameBucketProcessor(maxHamming, maxBucketSize, ttlConf),
+        // stage 1: hamming against bucket members of OTHER clips
+        new BandBucketProcessor[BandedFrame, FrameMember, FrameMatch](
+          maxBucketSize, ttlConf, Encoders.product[FrameMember],
+          h => FrameMember(h.docId, h.frameIdx, h.hi, h.lo, h.nKey), _.docId,
+          (h, m) => {
+            val d = java.lang.Long.bitCount(h.hi ^ m.hi) +
+              java.lang.Long.bitCount(h.lo ^ m.lo)
+            if (d > maxHamming) None
+            else if (h.docId < m.docId) Some(FrameMatch(h.docId, h.frameIdx, m.docId, h.nKey))
+            else Some(FrameMatch(m.docId, m.frameIdx, h.docId, m.nKey))
+          }),
         timeMode, OutputMode.Append())
       .groupByKey(m => (m.docA, m.docB))
       .transformWithState(

@@ -3,6 +3,8 @@ package graft.state
 import java.io.File
 import java.nio.file.Files
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Durability + the lenient recovery ladder under changelog checkpointing:
@@ -87,6 +89,44 @@ class RocksDbRecoverySuite extends AnyFunSuite {
     assert(contents(sEmpty).isEmpty)
     sEmpty.abort()
     p3.close()
+  }
+
+  test("a changelog cut inside a record replays nothing of its version") {
+    val dir = Files.createTempDirectory("graft-cutlog").toString
+    val p = initProvider(new RocksDbStateStoreProvider, dir)
+    (0 until 5).foreach { v =>
+      val s = p.getStore(v, None)
+      put(s, s"k$v", v)
+      s.commit()
+    }
+    val s5 = p.getStore(5, None)
+    put(s5, "a6", 6)
+    put(s5, "b6", 6)
+    put(s5, "k0", 60)
+    s5.commit()
+    p.close() // drop local snapshots: recovery must use the durable files
+
+    // cut changelog 6 inside its second record, as a torn upload would
+    // leave it. A record is [1B op][4B keyLen][key][4B valLen][val]; the
+    // first one is a put. The short file goes through the Hadoop
+    // FileSystem so that its checksum matches and the reader sees the cut
+    val log = new Path(s"$dir/0/0/state.changelog.6")
+    val bytes = Files.readAllBytes(new File(log.toString).toPath)
+    val buf = java.nio.ByteBuffer.wrap(bytes)
+    assert(buf.get() === 0)
+    val keyLen = buf.getInt()
+    buf.position(buf.position() + keyLen)
+    val valLen = buf.getInt()
+    val firstEnd = buf.position() + valLen
+    assert(firstEnd + 5 < bytes.length)
+    val out = log.getFileSystem(new Configuration()).create(log, true)
+    try out.write(bytes, 0, firstEnd + 5) finally out.close()
+
+    val p2 = initProvider(new RocksDbStateStoreProvider, dir)
+    val s6 = p2.getStore(6, None)
+    assert(contents(s6) === (0 until 5).map(v => s"k$v" -> v).toMap)
+    s6.abort()
+    p2.close()
   }
 
   test("restart recovery from durable artifacts alone (changelogs, no zip yet)") {
