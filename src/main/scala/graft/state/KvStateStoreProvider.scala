@@ -159,10 +159,12 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
   /** Serializes every registry (versions/bases) read-modify-write between
     * commit() on task threads and doMaintenance() on Spark's background
     * maintenance thread — without it a concurrent commit and GC can lose a
-    * version registration. Per-backend (= per operator/partition/store),
-    * so commits of different partitions never contend.
+    * version registration. One lock per store prefix, shared by every
+    * backend in the JVM: Spark's maintenance can still run a stopped
+    * query's provider on the prefix a restarted query commits to. Commits
+    * of different partitions never contend.
     */
-  private val registryLock = new Object
+  private val registryLock = KvSessionBackend.registryLock(storePrefix)
 
   private def readVersionSet(key: Array[Byte]): Set[Long] = {
     val raw = client.get(key)
@@ -528,6 +530,10 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
 }
 
 object KvSessionBackend {
+  private val registryLocks = new ConcurrentHashMap[String, Object]()
+  private def registryLock(storePrefix: String): Object =
+    registryLocks.computeIfAbsent(storePrefix, _ => new Object)
+
   /** Full-materialization cadence: every N commits the version is written
     * as a base instead of a delta, bounding read chains and recovery cost
     * (same amortization as the RocksDB snapshot cadence).

@@ -1,18 +1,20 @@
 package graft.state
 
-import java.io.{BufferedInputStream, BufferedOutputStream, File, FileInputStream, FileOutputStream}
-import java.nio.file.{Files, Path => JPath, Paths, StandardCopyOption}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, OutputStream}
+import java.nio.file.{Files, Path => JPath, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
-import java.util.zip.{ZipEntry, ZipInputStream, ZipOutputStream}
+import java.util.zip.{ZipEntry, ZipOutputStream}
 
 import scala.jdk.CollectionConverters._
-import scala.util.Try
+import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{LocalFileSystem, Path}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.state.StateStore
+import org.apache.spark.sql.graftbridge.CheckpointZip
 import org.rocksdb.{Checkpoint, CompactionStyle, CompressionType, Options, RocksDB, TtlDB}
 
 /** RocksDB-backed versioned KV backend — the parity flagship. Re-expresses
@@ -24,8 +26,9 @@ import org.rocksdb.{Checkpoint, CompactionStyle, CompressionType, Options, Rocks
   *    README.md:13-15 — the whole motivation),
   *  - commit seals the version: the working dir becomes a reusable local
   *    snapshot AND is zipped to the checkpoint FileSystem as
-  *    `state.snapshot.<version>` (reference :435-449, 504-526),
-  *  - recovery ladder on open: local snapshot (cheap `Files.move`) ▸ newest
+  *    `state.snapshot.<version>` (reference :435-449, 504-526), written
+  *    atomically through Spark's `CheckpointFileManager`,
+  *  - recovery ladder on open: local snapshot (hardlinked SSTs) ▸ newest
   *    loadable remote zip ≤ requested version ▸ empty store — corrupted
   *    snapshots silently degrade to older versions, an observable contract
   *    pinned by the reference suite (:90-117, :371-388, :454-499),
@@ -82,7 +85,18 @@ final class RocksDbSessionBackend(
   import RocksDbBackend._
 
   private val basePath = new Path(checkpointBaseDir)
-  private def fs: FileSystem = basePath.getFileSystem(hadoopConf)
+  // every checkpoint-FS operation goes through one of Spark's managers;
+  // their writes are atomic (temp file, then rename), so a file under its
+  // final name is always whole. On the local file system rename(2) is
+  // atomic and overwrites, and the FileSystem-based manager writes a file
+  // at a quarter of the cost of the FileContext-based one `create` picks,
+  // which without native Hadoop forks `readlink` on every rename
+  private val fm = basePath.getFileSystem(hadoopConf) match {
+    case _: LocalFileSystem => new FileSystemBasedCheckpointFileManager(basePath, hadoopConf)
+    case _ => CheckpointFileManager.create(basePath, hadoopConf)
+  }
+  // created on the first write, as a plain create would
+  private lazy val baseDirCreated: Unit = fm.mkdirs(basePath)
 
   private val localRoot: JPath =
     Files.createTempDirectory("graft-rocksdb-")
@@ -121,10 +135,11 @@ final class RocksDbSessionBackend(
 
   // ----- snapshot / changelog listing ---------------------------------------
 
-  private def listRemote(parse: String => Option[Long]): Seq[Long] = Try {
-    if (!fs.exists(basePath)) Seq.empty[Long]
-    else fs.listStatus(basePath).toSeq.flatMap(st => parse(st.getPath.getName))
-  }.getOrElse(Seq.empty)
+  // a listing error propagates: read as "no files", it would silently
+  // recover an older or empty store
+  private def listRemote(parse: String => Option[Long]): Seq[Long] =
+    if (!fm.exists(basePath)) Seq.empty
+    else fm.list(basePath).toSeq.flatMap(st => parse(st.getPath.getName))
 
   private def remoteSnapshotVersions(): Seq[Long] = listRemote(parseSnapshotVersion)
   private def remoteChangelogVersions(): Seq[Long] = listRemote(parseChangelogVersion)
@@ -133,22 +148,31 @@ final class RocksDbSessionBackend(
     (remoteSnapshotVersions() ++ remoteChangelogVersions() ++
       localSnapshots.keySet().asScala).distinct.sorted
 
+  /** Writes one checkpoint file atomically: `body` streams into a temp
+    * file that becomes `dest` on success and is dropped on failure. */
+  private def writeAtomic(dest: Path)(body: OutputStream => Unit): Unit = {
+    baseDirCreated
+    val raw = fm.createAtomic(dest, true)
+    val out = new BufferedOutputStream(raw)
+    try { body(out); out.flush() }
+    catch { case t: Throwable => raw.cancel(); throw t }
+    raw.close()
+  }
+
   // ----- changelog format ---------------------------------------------------
   // records: [1B op (0=put,1=del)][4B keyLen][key]([4B valLen][val] for put)
 
   private def writeChangelog(version: Long,
-                             changes: Seq[(Array[Byte], Array[Byte])]): Unit = {
-    val out = new java.io.DataOutputStream(new BufferedOutputStream(
-      fs.create(new Path(basePath, changelogFileName(version)), true)))
-    try {
+                             changes: Seq[(Array[Byte], Array[Byte])]): Unit =
+    writeAtomic(new Path(basePath, changelogFileName(version))) { os =>
+      val out = new DataOutputStream(os)
       changes.foreach { case (k, v) =>
         out.writeByte(if (v == null) 1 else 0)
         out.writeInt(k.length)
         out.write(k)
         if (v != null) { out.writeInt(v.length); out.write(v) }
       }
-    } finally out.close()
-  }
+    }
 
   /** Replays one version's changelog into `db`, all or nothing: the
     * whole file is parsed before the first write, so a changelog cut off
@@ -163,8 +187,8 @@ final class RocksDbSessionBackend(
     * source and the backing for the provider's change-data reader.
     */
   private[state] def changelogRecords(version: Long): Iterator[(Array[Byte], Array[Byte])] = {
-    val in = new java.io.DataInputStream(new BufferedInputStream(
-      fs.open(new Path(basePath, changelogFileName(version)))))
+    val in = new DataInputStream(new BufferedInputStream(
+      fm.open(new Path(basePath, changelogFileName(version)))))
     val buf = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Array[Byte])]
     try {
       var op = in.read()
@@ -182,92 +206,64 @@ final class RocksDbSessionBackend(
     buf.iterator
   }
 
-  /** A prefix scan over `db` (an empty prefix scans everything) whose
-    * native RocksIterator closes when the scan is drained or closed. An
-    * open scan stays in `openScans` so its session can close it before
-    * any DB teardown.
+  // ----- base loading -------------------------------------------------------
+
+  /** Opens in `dir` the snapshot at `base` (0 = the empty store) with the
+    * changelogs base+1..upTo replayed onto it, returning the DB and the
+    * version it reached. Strict, a missing snapshot or any changelog that
+    * does not apply throws; lenient, replay stops at the first such
+    * changelog. The one loader behind `open`'s ladder and `openReplay`.
     */
-  private def scanDb(db: RocksDB, prefix: Array[Byte],
-                     openScans: java.util.Set[KvScanIterator]): KvScanIterator = {
-    val it = db.newIterator()
-    if (prefix.isEmpty) it.seekToFirst() else it.seek(prefix)
-    val scanIt: KvScanIterator = new KvScanIterator {
-      private var done = false
-      private def check(): Unit =
-        if (!done && !(it.isValid &&
-          (prefix.isEmpty || ByteOrdering.hasPrefix(it.key(), prefix)))) {
-          close()
-        }
-      check()
-      def hasNext: Boolean = !done
-      def next(): (Array[Byte], Array[Byte]) = {
-        val kv = (it.key().clone(), it.value().clone())
-        it.next()
-        check()
-        kv
+  private def loadBase(dir: JPath, base: Long, upTo: Long, strict: Boolean): (RocksDB, Long) = {
+    clearDir(dir)
+    if (base > 0) {
+      val local = localSnapshots.get(base)
+      val zip = new Path(basePath, snapshotFileName(base))
+      if (local != null && Files.exists(local)) {
+        // same-executor fast path: hardlink the immutable SSTs; the
+        // snapshot dir stays intact for further retries
+        linkOrCopyDir(local, dir)
+      } else if (strict && !fm.exists(zip)) {
+        throw new IllegalStateException(s"no snapshot for version $base under $basePath")
+      } else {
+        CheckpointZip.unzip(basePath.getFileSystem(hadoopConf), zip, dir.toFile)
       }
-      def close(): Unit = if (!done) {
-        done = true
-        it.close()
-        openScans.remove(this)
-      }
+      // a corrupt archive can unzip to nothing and RocksDB would happily
+      // create a fresh DB — require a real manifest
+      if (!Files.exists(dir.resolve("CURRENT")))
+        throw new IllegalStateException(s"snapshot $base has no RocksDB manifest")
     }
-    if (scanIt.hasNext) openScans.add(scanIt)
-    scanIt
+    // MUST go through openDb: in non-strict TTL mode the live store is
+    // a TtlDB whose values carry a 4-byte timestamp suffix — replaying
+    // through a plain RocksDB.open would write unframed values into the
+    // same dir and silently corrupt every replayed value after recovery
+    val db = openDb(dir)
+    try {
+      var reached = base
+      while (reached < upTo && (Try(applyChangelog(db, reached + 1)) match {
+        case Success(_) => true
+        case Failure(e) => if (strict) throw e else false
+      })) reached += 1
+      (db, reached)
+    } catch { case t: Throwable => db.close(); clearDir(dir); throw t }
   }
 
-  // ----- load ladder --------------------------------------------------------
-
-  /** Newest reachable state ≤ loadVersion: try bases (local snapshot dirs,
-    * remote zips, the empty store) newest-first; from each loadable base
-    * replay changelogs base+1..loadVersion as far as they exist. Corrupted
-    * artifacts fall through to older bases — the reference's lenient
-    * ladder (:381-388) extended with changelog replay.
+  /** Newest reachable state ≤ loadVersion, opened in `dir`: bases (local
+    * snapshot dirs, remote zips, the empty store) are tried newest-first.
+    * A base that does not load falls through to the next older one — the
+    * reference's lenient ladder (:381-388) extended with changelog replay.
     */
-  private def loadInto(workDir: JPath, loadVersion: Long): Unit = {
-    if (loadVersion <= 0) return
-    val bases =
-      ((localSnapshots.keySet().asScala ++ remoteSnapshotVersions())
-        .filter(_ <= loadVersion).toSeq.distinct.sorted.reverse :+ 0L).distinct
-    val loaded = bases.iterator.map { base =>
-      Try {
-        clearDir(workDir)
-        if (base > 0) {
-          val local = localSnapshots.get(base)
-          if (local != null && Files.exists(local)) {
-            // same-executor fast path: hardlink the immutable SSTs; the
-            // snapshot dir stays intact for further retries
-            linkOrCopyDir(local, workDir)
-          } else {
-            unzipTo(new Path(basePath, snapshotFileName(base)), workDir)
-          }
-          // a corrupt archive can unzip to nothing and RocksDB would
-          // happily create a fresh DB — require a real manifest
-          require(Files.exists(workDir.resolve("CURRENT")),
-            s"snapshot $base has no RocksDB manifest")
-        }
-        // MUST go through openDb: in non-strict TTL mode the live store is
-        // a TtlDB whose values carry a 4-byte timestamp suffix — replaying
-        // through a plain RocksDB.open would write unframed values into the
-        // same dir and silently corrupt every replayed value after recovery
-        val db = openDb(workDir)
-        try {
-          var v = base + 1
-          var reached = base
-          var miss = false
-          while (v <= loadVersion && !miss) {
-            if (Try(applyChangelog(db, v)).isSuccess) { reached = v; v += 1 }
-            else miss = true
-          }
-          reached
-        } finally db.close()
-      }
-    }.collectFirst { case scala.util.Success(reached) => reached }
-    if (loaded.isEmpty) clearDir(workDir)
-    loaded.foreach { v =>
-      if (v != loadVersion)
-        logWarning(s"state version $loadVersion unavailable; recovered from $v")
-    }
+  private def openLatest(dir: JPath, loadVersion: Long): RocksDB = {
+    val bases = if (loadVersion <= 0) Seq.empty else
+      (localSnapshots.keySet().asScala ++ remoteSnapshotVersions())
+        .filter(_ <= loadVersion).toSeq.distinct.sorted.reverse
+    val (db, reached) = bases.iterator
+      .map(b => Try(loadBase(dir, b, loadVersion, strict = false)))
+      .collectFirst { case Success(loaded) => loaded }
+      .getOrElse(loadBase(dir, 0L, loadVersion, strict = false))
+    if (reached != loadVersion)
+      logWarning(s"state version $loadVersion unavailable; recovered from $reached")
+    db
   }
 
   // ----- live-DB cache ------------------------------------------------------
@@ -288,41 +284,80 @@ final class RocksDbSessionBackend(
     live = null
   }
 
-  // ----- session ------------------------------------------------------------
+  // ----- sessions -----------------------------------------------------------
+
+  /** What the live and the replay session share: point reads, one stats
+    * definition, and scans whose native RocksIterator is still open kept
+    * in `openScans` — a handle that outlives its DB can crash the JVM, so
+    * sessions close them before any DB teardown can follow.
+    */
+  private abstract class DbSession(db: RocksDB) extends StoreSession {
+    private val openScans = ConcurrentHashMap.newKeySet[KvScanIterator]()
+
+    protected def closeOpenScans(): Unit = {
+      openScans.asScala.toSeq.foreach(s => Try(s.close()))
+      openScans.clear()
+    }
+
+    def get(key: Array[Byte]): Array[Byte] = db.get(key)
+
+    /** A prefix scan (an empty prefix scans everything) whose native
+      * RocksIterator closes when the scan is drained or closed. */
+    def scan(prefix: Array[Byte]): KvScanIterator = {
+      val it = db.newIterator()
+      if (prefix.isEmpty) it.seekToFirst() else it.seek(prefix)
+      val scanIt: KvScanIterator = new KvScanIterator {
+        private var done = false
+        private def check(): Unit =
+          if (!done && !(it.isValid &&
+            (prefix.isEmpty || ByteOrdering.hasPrefix(it.key(), prefix)))) {
+            close()
+          }
+        check()
+        def hasNext: Boolean = !done
+        def next(): (Array[Byte], Array[Byte]) = {
+          val kv = (it.key().clone(), it.value().clone())
+          it.next()
+          check()
+          kv
+        }
+        def close(): Unit = if (!done) {
+          done = true
+          it.close()
+          openScans.remove(this)
+        }
+      }
+      if (scanIt.hasNext) openScans.add(scanIt)
+      scanIt
+    }
+
+    def numKeys: Long = db.getProperty("rocksdb.estimate-num-keys").toLong
+
+    def sizeBytes: Long =
+      db.getProperty("rocksdb.cur-size-all-mem-tables").toLong +
+        Try(db.getProperty("rocksdb.estimate-live-data-size").toLong).getOrElse(0L)
+  }
 
   override def open(loadVersion: Long, commitVersion: Long): StoreSession = {
     if (live == null || live.version != loadVersion) {
       invalidateLive()
       val workDir = Files.createTempDirectory(localRoot, "work-")
-      loadInto(workDir, loadVersion)
-      live = LiveDb(loadVersion, openDb(workDir), workDir)
+      live = LiveDb(loadVersion, openLatest(workDir, loadVersion), workDir)
     }
     val db = live.db
 
-    new StoreSession {
+    new DbSession(db) {
       // writes mutate the live DB; an abort after writes must invalidate it
       private var dirty = false
       // batch changelog: replayed on recovery for versions between zips
       private val changes = scala.collection.mutable.ArrayBuffer.empty[(Array[Byte], Array[Byte])]
-      // scans whose native RocksIterator is still open — a handle that
-      // outlives the DB (close with live iterators) can crash the JVM, so
-      // commit/abort drain this set before any DB teardown can follow
-      private val openScans = ConcurrentHashMap.newKeySet[KvScanIterator]()
 
-      private def closeOpenScans(): Unit = {
-        openScans.asScala.toSeq.foreach(s => Try(s.close()))
-        openScans.clear()
-      }
-
-      def get(key: Array[Byte]): Array[Byte] = db.get(key)
       def put(key: Array[Byte], value: Array[Byte]): Unit = {
         dirty = true; changes += ((key, value)); db.put(key, value)
       }
       def remove(key: Array[Byte]): Unit = {
         dirty = true; changes += ((key, null)); db.delete(key)
       }
-
-      def scan(prefix: Array[Byte]): KvScanIterator = scanDb(db, prefix, openScans)
 
       private var durabilityMs = 0L
 
@@ -358,12 +393,6 @@ final class RocksDbSessionBackend(
           invalidateLive()
         }
       }
-
-      def numKeys: Long = db.getProperty("rocksdb.estimate-num-keys").toLong
-
-      def sizeBytes: Long =
-        db.getProperty("rocksdb.cur-size-all-mem-tables").toLong +
-          Try(db.getProperty("rocksdb.estimate-live-data-size").toLong).getOrElse(0L)
     }
   }
 
@@ -379,32 +408,11 @@ final class RocksDbSessionBackend(
     */
   def openReplay(snapshotVersion: Long, endVersion: Long): StoreSession = {
     val workDir = Files.createTempDirectory(localRoot, "replay-")
-    if (snapshotVersion > 0) {
-      val local = localSnapshots.get(snapshotVersion)
-      if (local != null && Files.exists(local)) {
-        linkOrCopyDir(local, workDir)
-      } else {
-        val zip = new Path(basePath, snapshotFileName(snapshotVersion))
-        if (!Try(fs.exists(zip)).getOrElse(false))
-          throw new IllegalStateException(
-            s"no snapshot for version $snapshotVersion under $basePath")
-        unzipTo(zip, workDir)
-      }
-      if (!Files.exists(workDir.resolve("CURRENT")))
-        throw new IllegalStateException(
-          s"snapshot $snapshotVersion has no RocksDB manifest")
-    }
-    val db = openDb(workDir)
-    try {
-      var v = snapshotVersion + 1
-      while (v <= endVersion) { applyChangelog(db, v); v += 1 }
-    } catch { case t: Throwable => db.close(); clearDir(workDir); throw t }
+    val (db, _) = loadBase(workDir, snapshotVersion, endVersion, strict = true)
 
-    new StoreSession {
+    new DbSession(db) {
       private var closed = false
-      private val openScans = ConcurrentHashMap.newKeySet[KvScanIterator]()
 
-      def get(key: Array[Byte]): Array[Byte] = db.get(key)
       def put(key: Array[Byte], value: Array[Byte]): Unit =
         throw new UnsupportedOperationException("replay session is read-only")
       def remove(key: Array[Byte]): Unit =
@@ -412,20 +420,13 @@ final class RocksDbSessionBackend(
       def commit(): Unit =
         throw new UnsupportedOperationException("replay session is read-only")
 
-      def scan(prefix: Array[Byte]): KvScanIterator = scanDb(db, prefix, openScans)
-
       def abort(): Unit = if (!closed) {
         closed = true
-        openScans.asScala.toSeq.foreach(s => Try(s.close()))
-        openScans.clear()
+        closeOpenScans()
         Try(db.close())
         clearDir(workDir)
         Try(Files.deleteIfExists(workDir))
       }
-
-      def numKeys: Long = db.getProperty("rocksdb.estimate-num-keys").toLong
-      def sizeBytes: Long =
-        db.getProperty("rocksdb.cur-size-all-mem-tables").toLong
     }
   }
 
@@ -452,10 +453,10 @@ final class RocksDbSessionBackend(
     }
     base.foreach { b =>
       remoteSnapshotVersions().filter(_ < b).foreach { v =>
-        Try(fs.delete(new Path(basePath, snapshotFileName(v)), false))
+        Try(fm.delete(new Path(basePath, snapshotFileName(v))))
       }
       remoteChangelogVersions().filter(_ <= b).foreach { v =>
-        Try(fs.delete(new Path(basePath, changelogFileName(v)), false))
+        Try(fm.delete(new Path(basePath, changelogFileName(v))))
       }
     }
     // local snapshot dirs below the retention horizon are never needed again
@@ -490,44 +491,20 @@ final class RocksDbSessionBackend(
     } finally listing.close()
   }
 
-  // ----- zip/unzip through the checkpoint FileSystem ------------------------
-
-  private def zipDir(dir: JPath, dest: Path): Unit = {
-    val out = new ZipOutputStream(new BufferedOutputStream(fs.create(dest, true)))
-    val listing = Files.list(dir)
-    try {
-      listing.iterator().asScala.filter(Files.isRegularFile(_)).foreach { f =>
-        out.putNextEntry(new ZipEntry(f.getFileName.toString))
-        val in = new BufferedInputStream(new FileInputStream(f.toFile))
-        try transfer(in, out) finally in.close()
-        out.closeEntry()
-      }
-    } finally {
-      listing.close()
-      out.close()
+  /** Zips the regular files of `dir` into `dest`, atomically. */
+  private def zipDir(dir: JPath, dest: Path): Unit =
+    writeAtomic(dest) { os =>
+      val zip = new ZipOutputStream(os)
+      val listing = Files.list(dir)
+      try {
+        listing.iterator().asScala.filter(Files.isRegularFile(_)).foreach { f =>
+          zip.putNextEntry(new ZipEntry(f.getFileName.toString))
+          Files.copy(f, zip)
+          zip.closeEntry()
+        }
+      } finally listing.close()
+      zip.finish()
     }
-  }
-
-  private def unzipTo(src: Path, dir: JPath): Unit = {
-    Files.createDirectories(dir)
-    val in = new ZipInputStream(new BufferedInputStream(fs.open(src)))
-    try {
-      var e = in.getNextEntry
-      while (e != null) {
-        val name = Paths.get(e.getName).getFileName.toString // no path escape
-        val out = new BufferedOutputStream(
-          new FileOutputStream(dir.resolve(name).toFile))
-        try transfer(in, out) finally out.close()
-        e = in.getNextEntry
-      }
-    } finally in.close()
-  }
-
-  private def transfer(in: java.io.InputStream, out: java.io.OutputStream): Unit = {
-    val buf = new Array[Byte](64 * 1024)
-    var n = in.read(buf)
-    while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-  }
 
   private def clearDir(dir: JPath): Unit =
     if (Files.exists(dir)) {

@@ -132,4 +132,62 @@ class KvConcurrencySuite extends AnyFunSuite {
       appender.stop()
     }
   }
+
+  /** Two backends on one prefix, as when Spark's maintenance still runs a
+    * stopped query's provider while the restarted query commits. The
+    * maintenance backend's registry rewrite is held until the other
+    * backend's commit returns (or 2 s pass): under one lock per prefix the
+    * commit waits for it instead, and no registration is lost.
+    */
+  private def twoBackendsOnOnePrefix(newClient: () => KvClient): Unit = {
+    val prefix = s"two-backends-${System.nanoTime()}"
+    val writer = new KvSessionBackend(prefix, newClient())
+    (1 to 12).foreach { v =>
+      val s = writer.open(v - 1, v); s.put(k(s"key$v"), k(s"v$v")); s.commit()
+    }
+
+    val rewriting = new CountDownLatch(1)
+    val commitReturned = new CountDownLatch(1)
+    val under = newClient()
+    val stalling = new KvClient {
+      def get(key: Array[Byte]): Array[Byte] = under.get(key)
+      def writeBatch(puts: Seq[(Array[Byte], Array[Byte])], deletes: Seq[Array[Byte]]): Unit = {
+        if (puts.exists(p => new String(p._1, "UTF-8") == s"$prefix:__versions__")) {
+          rewriting.countDown()
+          commitReturned.await(2, TimeUnit.SECONDS)
+        }
+        under.writeBatch(puts, deletes)
+      }
+      def scanPrefix(p: Array[Byte]): Iterator[(Array[Byte], Array[Byte])] = under.scanPrefix(p)
+      def deletePrefix(p: Array[Byte]): Unit = under.deletePrefix(p)
+      def close(): Unit = under.close()
+    }
+    val maintainer = new KvSessionBackend(prefix, stalling)
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      val gc = pool.submit(new Runnable { def run(): Unit = maintainer.doMaintenance(3) })
+      assert(rewriting.await(30, TimeUnit.SECONDS), "maintenance never rewrote the registry")
+      val s = writer.open(12, 13)
+      s.put(k("key13"), k("v13"))
+      s.commit()
+      commitReturned.countDown()
+      gc.get(30, TimeUnit.SECONDS)
+    } finally pool.shutdown()
+
+    assert(writer.committedVersions().contains(13L),
+      s"version 13 lost its registration: ${writer.committedVersions()}")
+    val reader = new KvSessionBackend(prefix, newClient())
+    val state = reader.open(13, 14).scan(Array.emptyByteArray)
+      .map { case (key, v) => new String(key, "UTF-8") -> new String(v, "UTF-8") }.toMap
+    assert(state === (1 to 13).map(v => s"key$v" -> s"v$v").toMap)
+    Seq(writer, maintainer, reader).foreach(_.close())
+  }
+
+  test("two backends on one prefix: maintenance loses no concurrent commit (in-JVM client)") {
+    twoBackendsOnOnePrefix(() => EmbeddedKvServer.client("two-backends"))
+  }
+
+  test("two backends on one prefix: maintenance loses no concurrent commit (RESP)") {
+    twoBackendsOnOnePrefix(() => RespKvServer.newSharedClient())
+  }
 }
