@@ -5,6 +5,8 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.collection.immutable.TreeMap
 import scala.jdk.CollectionConverters._
 
+import com.google.common.collect.MapMaker
+
 /** External-KV backend seam — the role the reference's Redis and Aerospike
   * providers play (reference RedisStateStoreProvider.scala,
   * AerospikeStateStoreProvider.scala), with their client libraries behind
@@ -530,7 +532,8 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
 }
 
 object KvSessionBackend {
-  private val registryLocks = new ConcurrentHashMap[String, Object]()
+  // weak values: a prefix's lock goes once no backend on it holds it
+  private val registryLocks = new MapMaker().weakValues().makeMap[String, Object]()
   private def registryLock(storePrefix: String): Object =
     registryLocks.computeIfAbsent(storePrefix, _ => new Object)
 

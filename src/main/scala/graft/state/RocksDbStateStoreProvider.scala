@@ -1,15 +1,15 @@
 package graft.state
 
-import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, OutputStream}
-import java.nio.file.{Files, Path => JPath, StandardCopyOption}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, FileNotFoundException, IOException, OutputStream}
+import java.nio.file.{Files, NoSuchFileException, Path => JPath, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
-import java.util.zip.{ZipEntry, ZipOutputStream}
+import java.util.zip.{ZipEntry, ZipException, ZipOutputStream}
 
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{LocalFileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumException, LocalFileSystem, Path}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
@@ -208,11 +208,26 @@ final class RocksDbSessionBackend(
 
   // ----- base loading -------------------------------------------------------
 
+  /** Whether a failed load must surface even in the lenient ladder. Every
+    * file under its final name is written by an atomic rename, so the
+    * ladder falls through only on a damaged file (a checksum, zip or
+    * RocksDB error, a cut record, a missing manifest) or one a concurrent
+    * GC removed; any other I/O error is the checkpoint store failing, and
+    * falling through on it would silently recover an older store.
+    */
+  private def isStoreFault(e: Throwable): Boolean = e match {
+    case _: ChecksumException | _: EOFException | _: ZipException |
+         _: FileNotFoundException | _: NoSuchFileException => false
+    case _: IOException => true
+    case _ => false
+  }
+
   /** Opens in `dir` the snapshot at `base` (0 = the empty store) with the
     * changelogs base+1..upTo replayed onto it, returning the DB and the
     * version it reached. Strict, a missing snapshot or any changelog that
-    * does not apply throws; lenient, replay stops at the first such
-    * changelog. The one loader behind `open`'s ladder and `openReplay`.
+    * does not apply throws; lenient, replay stops at the first damaged or
+    * missing changelog. The one loader behind `open`'s ladder and
+    * `openReplay`.
     */
   private def loadBase(dir: JPath, base: Long, upTo: Long, strict: Boolean): (RocksDB, Long) = {
     clearDir(dir)
@@ -242,7 +257,7 @@ final class RocksDbSessionBackend(
       var reached = base
       while (reached < upTo && (Try(applyChangelog(db, reached + 1)) match {
         case Success(_) => true
-        case Failure(e) => if (strict) throw e else false
+        case Failure(e) => if (strict || isStoreFault(e)) throw e else false
       })) reached += 1
       (db, reached)
     } catch { case t: Throwable => db.close(); clearDir(dir); throw t }
@@ -250,8 +265,9 @@ final class RocksDbSessionBackend(
 
   /** Newest reachable state ≤ loadVersion, opened in `dir`: bases (local
     * snapshot dirs, remote zips, the empty store) are tried newest-first.
-    * A base that does not load falls through to the next older one — the
-    * reference's lenient ladder (:381-388) extended with changelog replay.
+    * A damaged base falls through to the next older one — the reference's
+    * lenient ladder (:381-388) extended with changelog replay; a fault of
+    * the checkpoint store itself throws.
     */
   private def openLatest(dir: JPath, loadVersion: Long): RocksDB = {
     val bases = if (loadVersion <= 0) Seq.empty else
@@ -259,7 +275,10 @@ final class RocksDbSessionBackend(
         .filter(_ <= loadVersion).toSeq.distinct.sorted.reverse
     val (db, reached) = bases.iterator
       .map(b => Try(loadBase(dir, b, loadVersion, strict = false)))
-      .collectFirst { case Success(loaded) => loaded }
+      .collectFirst {
+        case Success(loaded) => loaded
+        case Failure(e) if isStoreFault(e) => throw e
+      }
       .getOrElse(loadBase(dir, 0L, loadVersion, strict = false))
     if (reached != loadVersion)
       logWarning(s"state version $loadVersion unavailable; recovered from $reached")
@@ -529,7 +548,7 @@ class RocksDbStateStoreProvider extends GraftStateStoreProviderBase
 
   override protected def createBackend(): SessionBackend =
     new RocksDbSessionBackend(
-      storeId.storeCheckpointLocation.toString,
+      storeId.storeCheckpointLocation().toString,
       hadoopConf,
       ttlConf,
       storeConf.sqlConfs ++ storeConf.extraOptions,

@@ -5,16 +5,17 @@ import java.net.URI
 import java.nio.file.Files
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.execution.streaming.state.{NoPrefixKeyStateEncoderSpec, StateStoreId}
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The local file system under the `faultfs` scheme, with two faults that
-  * can be switched on: writes to a file whose name contains `tearName`
-  * fail after `tearAfterBytes` bytes (an upload that dies partway), and
-  * listings fail (a transient outage of the checkpoint store).
+/** The local file system under the `faultfs` scheme, with three faults
+  * that can be switched on: writes to a file whose name contains
+  * `tearName` fail after `tearAfterBytes` bytes (an upload that dies
+  * partway), and listings fail, or opening a file whose name contains
+  * `failOpenName` fails (a transient outage of the checkpoint store).
   */
 class FaultFs extends RawLocalFileSystem {
   override def getUri: URI = URI.create("faultfs:///")
@@ -32,14 +33,21 @@ class FaultFs extends RawLocalFileSystem {
     if (FaultFs.failListing) throw new IOException(s"injected listing failure at $f")
     super.listStatus(f)
   }
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    val fail = FaultFs.failOpenName
+    if (fail != null && f.getName.contains(fail)) throw new IOException(s"injected open failure at $f")
+    super.open(f, bufferSize)
+  }
 }
 
 object FaultFs {
   @volatile var tearName: String = null
   @volatile var tearAfterBytes: Long = 0L
   @volatile var failListing: Boolean = false
+  @volatile var failOpenName: String = null
 
-  def reset(): Unit = { tearName = null; failListing = false }
+  def reset(): Unit = { tearName = null; failListing = false; failOpenName = null }
 
   /** Passes `limit` bytes through, then fails every write; close still
     * closes the file, so whatever got through stays on disk. */
@@ -161,6 +169,29 @@ class RocksDbFaultSuite extends AnyFunSuite with BeforeAndAfterEach {
     assert(contents(s) === model(7))
     s.abort()
     p2.close()
+  }
+
+  test("a file that is listed but cannot be opened throws instead of opening an older store") {
+    val dir = newDir()
+    val p = provider(dir)
+    (1 to 7).foreach { v =>
+      commitVersions(p, v, v)
+      p.doMaintenance() // retention 1: changelogs at or below snapshot 5 go
+    }
+    p.close()
+
+    // the changelog on top of the base, then the only base
+    Seq("state.changelog.7", "state.snapshot.5").foreach { name =>
+      FaultFs.failOpenName = name
+      val p2 = provider(dir)
+      val e = intercept[IOException](p2.getStore(7, None))
+      assert(e.getMessage.contains("injected open failure"), name)
+      FaultFs.reset()
+      val s = p2.getStore(7, None)
+      assert(contents(s) === model(7))
+      s.abort()
+      p2.close()
+    }
   }
 
   test("Spark's FileContext-based manager, used off the local file system, commits and recovers") {
