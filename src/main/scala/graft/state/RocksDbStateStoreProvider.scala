@@ -3,10 +3,11 @@ package graft.state
 import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, DataOutputStream, EOFException, FileNotFoundException, IOException, OutputStream}
 import java.nio.file.{Files, NoSuchFileException, Path => JPath, StandardCopyOption}
 import java.util.concurrent.ConcurrentHashMap
-import java.util.zip.{ZipEntry, ZipException, ZipOutputStream}
+import java.util.zip.{Deflater, ZipEntry, ZipException, ZipOutputStream}
 
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success, Try}
+import scala.util.matching.Regex
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumException, LocalFileSystem, Path}
@@ -24,16 +25,20 @@ import org.rocksdb.{Checkpoint, CompactionStyle, CompressionType, Options, Rocks
   *  - one RocksDB working directory per open store version; off-heap
   *    memtables/SSTs instead of an all-in-JVM-heap map (reference
   *    README.md:13-15 — the whole motivation),
-  *  - commit seals the version: the working dir becomes a reusable local
-  *    snapshot AND is zipped to the checkpoint FileSystem as
-  *    `state.snapshot.<version>` (reference :435-449, 504-526), written
-  *    atomically through Spark's `CheckpointFileManager`,
-  *  - recovery ladder on open: local snapshot (hardlinked SSTs) ▸ newest
-  *    loadable remote zip ≤ requested version ▸ empty store — corrupted
-  *    snapshots silently degrade to older versions, an observable contract
-  *    pinned by the reference suite (:90-117, :371-388, :454-499),
-  *  - maintenance GCs snapshots below `max − minVersionsToRetain + 1`
-  *    (reference :560-579),
+  *  - commit seals the version with its changelog alone; every
+  *    `snapshotIntervalBatches`-th commit also takes a local RocksDB
+  *    `Checkpoint` (hardlinked SSTs, reused by same-executor reopens) and
+  *    zips it, entries stored uncompressed (the SSTs are Snappy-compressed
+  *    already), to the checkpoint FileSystem as `state.snapshot.<version>`
+  *    (reference :435-449, 504-526); every file is written atomically
+  *    through Spark's `CheckpointFileManager`,
+  *  - recovery ladder on open: local checkpoint ▸ newest loadable remote
+  *    zip ≤ requested version ▸ empty store, each plus changelog replay —
+  *    corrupted snapshots silently degrade to older versions, an
+  *    observable contract pinned by the reference suite (:90-117,
+  *    :371-388, :454-499),
+  *  - maintenance GCs behind the newest snapshot ≤ `max −
+  *    minVersionsToRetain + 1` (reference :560-579),
   *  - non-strict TTL delegates to RocksDB's `TtlDB` lazy
   *    compaction-time expiry (reference :107); strict TTL is enforced
   *    exactly in the provider base's expiry index.
@@ -55,18 +60,11 @@ object RocksDbBackend {
 
   def snapshotFileName(version: Long): String = s"state.snapshot.$version"
   def changelogFileName(version: Long): String = s"state.changelog.$version"
-  private val SnapshotRe = raw"state\.snapshot\.(\d+)".r
-  private val ChangelogRe = raw"state\.changelog\.(\d+)".r
-
-  def parseSnapshotVersion(name: String): Option[Long] = name match {
-    case SnapshotRe(v) => Some(v.toLong)
-    case _ => None
-  }
-
-  def parseChangelogVersion(name: String): Option[Long] = name match {
-    case ChangelogRe(v) => Some(v.toLong)
-    case _ => None
-  }
+  private[state] val SnapshotRe = raw"state\.snapshot\.(\d+)".r
+  private[state] val ChangelogRe = raw"state\.changelog\.(\d+)".r
+  // a write that died before its rename leaves `.<final name>.<uuid>.tmp`
+  // and, on a checksummed file system, its `..<final name>.<uuid>.tmp.crc`
+  private[state] val TempRe = raw"\.\.?state\.(?:snapshot|changelog)\.(\d+)\..+\.tmp(?:\.crc)?".r
 
   /** Full zip snapshot cadence: every N commits; changelogs cover the
     * versions in between (the built-in provider's changelog-checkpointing
@@ -101,8 +99,9 @@ final class RocksDbSessionBackend(
   private val localRoot: JPath =
     Files.createTempDirectory("graft-rocksdb-")
 
-  /** version → local committed snapshot dir, reused on sequential batches
-    * on the same executor (reference :100, 286-291, 466-485). */
+  /** version → local cadence checkpoint dir, registered once its zip has
+    * landed: the base a same-executor reopen hardlinks (reference :100,
+    * 286-291, 466-485). */
   private val localSnapshots = new ConcurrentHashMap[Long, JPath]()
 
   private def newOptions(): Options = {
@@ -116,6 +115,10 @@ final class RocksDbSessionBackend(
       confs.get(BackgroundJobsKey).map(_.toInt).getOrElse(DefaultBackgroundJobs))
     o.setCompressionType(CompressionType.SNAPPY_COMPRESSION)
     o.setCompactionStyle(CompactionStyle.UNIVERSAL)
+    // the WAL lives until the cadence flush and would otherwise hold
+    // 1.1 × the write buffer of preallocated disk per open store; a store
+    // its JVM never closes leaves that behind
+    o.setAllowFAllocate(false)
     o
   }
 
@@ -137,12 +140,12 @@ final class RocksDbSessionBackend(
 
   // a listing error propagates: read as "no files", it would silently
   // recover an older or empty store
-  private def listRemote(parse: String => Option[Long]): Seq[Long] =
+  private def listRemote(re: Regex): Seq[Long] =
     if (!fm.exists(basePath)) Seq.empty
-    else fm.list(basePath).toSeq.flatMap(st => parse(st.getPath.getName))
+    else fm.list(basePath).toSeq.map(_.getPath.getName).collect { case re(v) => v.toLong }
 
-  private def remoteSnapshotVersions(): Seq[Long] = listRemote(parseSnapshotVersion)
-  private def remoteChangelogVersions(): Seq[Long] = listRemote(parseChangelogVersion)
+  private def remoteSnapshotVersions(): Seq[Long] = listRemote(SnapshotRe)
+  private def remoteChangelogVersions(): Seq[Long] = listRemote(ChangelogRe)
 
   override def committedVersions(): Seq[Long] =
     (remoteSnapshotVersions() ++ remoteChangelogVersions() ++
@@ -290,8 +293,10 @@ final class RocksDbSessionBackend(
   /** The open DB positioned at a committed version. Kept open across
     * batches (like Spark's built-in provider keeps its loaded store):
     * sequential batches on the same executor skip close→move→reopen
-    * entirely — commit snapshots via RocksDB `Checkpoint` (hardlinked
-    * SSTs, cheap) without closing the live DB.
+    * entirely. A commit writes only its changelog; the cadence commit's
+    * RocksDB `Checkpoint` (hardlinked SSTs) is taken without closing the
+    * live DB. Any other open goes through `openLatest`: the newest local
+    * checkpoint plus the changelogs after it.
     */
   private case class LiveDb(var version: Long, db: RocksDB, dir: JPath)
   private var live: LiveDb = null
@@ -385,18 +390,18 @@ final class RocksDbSessionBackend(
         closeOpenScans()
         // durability per commit = the small changelog, written synchronously
         writeChangelog(commitVersion, changes.toSeq)
-        // consistent local point-in-time snapshot via hardlinks (cheap;
-        // same-executor reuse + base for future retries)
-        val snapDir = localRoot.resolve(s"snapshot-$commitVersion")
-        clearDir(snapDir); Files.deleteIfExists(snapDir)
-        val cp = Checkpoint.create(db)
-        try cp.createCheckpoint(snapDir.toString) finally cp.close()
-        localSnapshots.put(commitVersion, snapDir)
         live.version = commitVersion
-        // full zip upload only on the snapshot cadence — recovery replays
+        // only on the snapshot cadence: a point-in-time checkpoint
+        // (hardlinked SSTs) zipped to the checkpoint FS, then kept as the
+        // local base of same-executor reopens — recovery replays
         // changelogs from the newest snapshot
         if (commitVersion % snapshotInterval == 0) {
+          val snapDir = localRoot.resolve(s"snapshot-$commitVersion")
+          clearDir(snapDir); Files.deleteIfExists(snapDir)
+          val cp = Checkpoint.create(db)
+          try cp.createCheckpoint(snapDir.toString) finally cp.close()
           zipDir(snapDir, new Path(basePath, snapshotFileName(commitVersion)))
+          localSnapshots.put(commitVersion, snapDir)
           onSnapshotUploaded(commitVersion)
         }
         durabilityMs = (System.nanoTime() - t0) / 1000000L
@@ -451,37 +456,33 @@ final class RocksDbSessionBackend(
 
   // ----- maintenance --------------------------------------------------------
 
+  /** GC behind the newest snapshot ≤ `max − minVersionsToRetain + 1`, so
+    * a deleted changelog never strands the retained range: older zips,
+    * the changelogs the base covers, temp files of writes at or below it
+    * that died before their rename (one above may still be in flight),
+    * and local checkpoints below it. Bases come only from the snapshot
+    * cadence, so with `snapshotIntervalBatches` above the retention GC
+    * keeps changelogs back to the newest cadence base: more files than
+    * the retention asks for, never fewer.
+    */
   override def doMaintenance(minVersionsToRetain: Int): Unit = {
     val vs = committedVersions()
     if (vs.isEmpty) return
     val earliest = vs.max - minVersionsToRetain + 1
-    // a GC'd changelog must never strand the retained range: establish a
-    // full-snapshot base ≤ earliest first (zipping a local snapshot dir if
-    // the cadence hasn't produced one), then delete only below that base
-    var base = remoteSnapshotVersions().filter(_ <= earliest).maxOption
-    if (base.isEmpty) {
-      val localBase = localSnapshots.keySet().asScala.filter(_ <= earliest).maxOption
-      localBase.foreach { v =>
-        val dir = localSnapshots.get(v)
-        if (dir != null && Files.exists(dir) &&
-            Try(zipDir(dir, new Path(basePath, snapshotFileName(v)))).isSuccess) {
-          base = Some(v)
-          onSnapshotUploaded(v)
+    remoteSnapshotVersions().filter(_ <= earliest).maxOption.foreach { base =>
+      fm.list(basePath).map(_.getPath).foreach { p =>
+        val stale = p.getName match {
+          case SnapshotRe(v) => v.toLong < base
+          case ChangelogRe(v) => v.toLong <= base
+          case TempRe(v) => v.toLong <= base
+          case _ => false
         }
+        if (stale) Try(fm.delete(p))
       }
-    }
-    base.foreach { b =>
-      remoteSnapshotVersions().filter(_ < b).foreach { v =>
-        Try(fm.delete(new Path(basePath, snapshotFileName(v))))
+      localSnapshots.keySet().asScala.filter(_ < base).foreach { v =>
+        val local = localSnapshots.remove(v)
+        if (local != null) { clearDir(local); Try(Files.deleteIfExists(local)) }
       }
-      remoteChangelogVersions().filter(_ <= b).foreach { v =>
-        Try(fm.delete(new Path(basePath, changelogFileName(v))))
-      }
-    }
-    // local snapshot dirs below the retention horizon are never needed again
-    localSnapshots.keySet().asScala.filter(_ < earliest).foreach { v =>
-      val local = localSnapshots.remove(v)
-      if (local != null) { clearDir(local); Try(Files.deleteIfExists(local)) }
     }
   }
 
@@ -510,10 +511,14 @@ final class RocksDbSessionBackend(
     } finally listing.close()
   }
 
-  /** Zips the regular files of `dir` into `dest`, atomically. */
+  /** Zips the regular files of `dir` into `dest`, atomically. Entries are
+    * stored, not deflated: the SSTs are Snappy-compressed already, and
+    * deflating them made the zip ten times slower to save 6 % of its
+    * bytes. Older deflated archives unzip the same way. */
   private def zipDir(dir: JPath, dest: Path): Unit =
     writeAtomic(dest) { os =>
       val zip = new ZipOutputStream(os)
+      zip.setLevel(Deflater.NO_COMPRESSION)
       val listing = Files.list(dir)
       try {
         listing.iterator().asScala.filter(Files.isRegularFile(_)).foreach { f =>

@@ -66,7 +66,9 @@ object FaultFs {
 /** Checkpoint-FS faults against the RocksDB backend: a torn upload must
   * leave no file under its final name (so GC can never take it as a base),
   * a listing failure must surface instead of recovering an older or empty
-  * store, and a truncated snapshot must fall back to an older base.
+  * store, a truncated snapshot must fall back to an older base, and
+  * maintenance must clear the temp files of dead writes at or below its
+  * GC base.
   */
 class RocksDbFaultSuite extends AnyFunSuite with BeforeAndAfterEach {
   import StateTestHelper._
@@ -91,16 +93,6 @@ class RocksDbFaultSuite extends AnyFunSuite with BeforeAndAfterEach {
 
   private def stateFile(dir: String, name: String): java.io.File =
     new java.io.File(new URI(dir).getPath, s"0/0/$name")
-
-  /** Commits versions `from..to`, version v adding key k<v> = v. */
-  private def commitVersions(p: RocksDbStateStoreProvider, from: Int, to: Int): Unit =
-    (from to to).foreach { v =>
-      val s = p.getStore(v - 1, None)
-      put(s, s"k$v", v)
-      s.commit()
-    }
-
-  private def model(upTo: Int): Map[String, Int] = (1 to upTo).map(v => s"k$v" -> v).toMap
 
   test("a torn snapshot upload leaves no snapshot file and GC keeps the last good version") {
     val dir = newDir()
@@ -235,5 +227,33 @@ class RocksDbFaultSuite extends AnyFunSuite with BeforeAndAfterEach {
     assert(contents(s) === model(11))
     s.abort()
     p2.close()
+  }
+
+  test("maintenance deletes temp files of dead writes at or below the GC base only") {
+    val dir = newDir()
+    val p = provider(dir)
+    commitVersions(p, 1, 9) // retention 1: the GC base is snapshot 5
+    // what a crash between createAtomic and its rename leaves behind,
+    // planted at and below the base and above it (a write still in flight)
+    def leftovers(snapshot: Int, changelog: Int): Seq[String] = Seq(
+      s".state.snapshot.$snapshot.${java.util.UUID.randomUUID}.tmp",
+      s".state.changelog.$changelog.${java.util.UUID.randomUUID}.TID7.tmp"
+    ).flatMap(n => Seq(n, s".$n.crc"))
+    val below = leftovers(snapshot = 5, changelog = 3)
+    val above = leftovers(snapshot = 10, changelog = 7)
+    val conf = new Configuration()
+    conf.set("fs.faultfs.impl", classOf[FaultFs].getName)
+    val stateDir = new Path(s"$dir/0/0")
+    val fs = stateDir.getFileSystem(conf)
+    (below ++ above).foreach(n => fs.create(new Path(stateDir, n), false).close())
+
+    p.doMaintenance()
+    val names = stateFile(dir, "").list().toSeq
+    assert(below.filter(names.contains) === Nil)
+    assert(above.filterNot(names.contains) === Nil)
+    assert(names.filter(_.startsWith("state.")).sorted ===
+      Seq("state.changelog.6", "state.changelog.7", "state.changelog.8", "state.changelog.9",
+        "state.snapshot.5"))
+    p.close()
   }
 }

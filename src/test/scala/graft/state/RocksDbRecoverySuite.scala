@@ -2,6 +2,9 @@ package graft.state
 
 import java.io.File
 import java.nio.file.Files
+import java.util.zip.{ZipEntry, ZipFile, ZipOutputStream}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -142,6 +145,65 @@ class RocksDbRecoverySuite extends AnyFunSuite {
     assert(contents(s1).size === 50)
     assert(get(s1, "k37").contains(37))
     s1.abort()
+    p2.close()
+  }
+
+  test("snapshots are written stored; one deflated as older versions wrote it still loads") {
+    val dir = Files.createTempDirectory("graft-deflated").toString
+    val p = initProvider(new RocksDbStateStoreProvider, dir)
+    commitVersions(p, 1, 7)
+    p.close()
+
+    // the new archive stores every entry: deflate would shrink the text
+    // files (OPTIONS, MANIFEST) below their size
+    val zipPath = new Path(s"$dir/0/0/state.snapshot.5")
+    def entries(): Seq[(ZipEntry, Array[Byte])] = {
+      val zf = new ZipFile(zipPath.toString)
+      try zf.entries().asScala.toSeq.map(e => e -> zf.getInputStream(e).readAllBytes())
+      finally zf.close()
+    }
+    val stored = entries()
+    assert(stored.nonEmpty)
+    stored.foreach { case (e, _) =>
+      assert(e.getCompressedSize >= e.getSize, s"${e.getName} is deflated")
+    }
+
+    // re-zip it at the default deflate level, through the Hadoop
+    // FileSystem so that its checksum matches
+    val fs = zipPath.getFileSystem(new Configuration())
+    val out = new ZipOutputStream(fs.create(zipPath, true))
+    try stored.foreach { case (e, bytes) =>
+      out.putNextEntry(new ZipEntry(e.getName)); out.write(bytes); out.closeEntry()
+    } finally out.close()
+    assert(entries().exists { case (e, _) => e.getCompressedSize < e.getSize })
+    // without changelogs 1..5 only the snapshot can reach version 7
+    (1 to 5).foreach(v => fs.delete(new Path(s"$dir/0/0/state.changelog.$v"), false))
+
+    val p2 = initProvider(new RocksDbStateStoreProvider, dir)
+    val s7 = p2.getStore(7, None)
+    assert(contents(s7) === model(7))
+    s7.abort()
+    p2.close()
+  }
+
+  test("a dirty abort between cadences reopens from the local base plus changelogs") {
+    val dir = Files.createTempDirectory("graft-reopen").toString
+    val p = initProvider(new RocksDbStateStoreProvider, dir)
+    commitVersions(p, 1, 7) // local checkpoint at 5 only; 6 and 7 are changelogs
+    val dirty = p.getStore(7, None)
+    put(dirty, "uncommitted", 99)
+    dirty.abort()
+
+    val s7 = p.getStore(7, None)
+    assert(contents(s7) === model(7))
+    put(s7, "k8", 8)
+    assert(s7.commit() === 8)
+    p.close()
+
+    val p2 = initProvider(new RocksDbStateStoreProvider, dir)
+    val s8 = p2.getStore(8, None)
+    assert(contents(s8) === model(8))
+    s8.abort()
     p2.close()
   }
 }

@@ -73,4 +73,15 @@ object StateTestHelper {
 
   def contents(store: ReadStateStore): Map[String, Int] =
     rowPairsToMap(store.iterator(StateStore.DEFAULT_COL_FAMILY_NAME))
+
+  /** Commits versions `from..to`, version v adding key k<v> = v. */
+  def commitVersions(p: StateStoreProvider, from: Int, to: Int): Unit =
+    (from to to).foreach { v =>
+      val s = p.getStore(v - 1, None)
+      put(s, s"k$v", v)
+      s.commit()
+    }
+
+  /** The state `commitVersions(p, 1, upTo)` leaves. */
+  def model(upTo: Int): Map[String, Int] = (1 to upTo).map(v => s"k$v" -> v).toMap
 }
