@@ -9,7 +9,7 @@ object Bench {
     * slower than a clean run — the BENCH_r05 phantom-spike failure mode.
     * Safe between queries: every DataFrame from the previous query is
     * discarded, so no unpersisted lineage is ever re-walked. */
-  private def dropLeftoverBlocks(spark: SparkSession): Unit = {
+  private[graft] def dropLeftoverBlocks(spark: SparkSession): Unit = {
     spark.sharedState.cacheManager.clearCache()
     // blocking: the next query must start against actually-freed storage
     // memory — an async drop races the next measurement and the lingering
@@ -132,12 +132,12 @@ object Bench {
         .map(name -> _).getOrElse(name -> t)
     }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core the machine has — the driver runs this without
-    // SPARK_GRAFT_CPUS set, and a 4-thread default wastes 28 cores
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
+  /** The session every query is timed on (and inspected on, by
+    * `graft.tools.Inspect`), on `cpus` local cores. `cpus` defaults to
+    * every core the machine has — the driver runs Bench without
+    * SPARK_GRAFT_CPUS set, and a 4-thread default wastes 28 cores. */
+  private[graft] def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)): SparkSession = {
     // Scale-adaptive scan splitting (r19): Spark already derives each
     // scan's split size as min(maxPartitionBytes, max(openCostInBytes,
     // scanBytes / defaultParallelism)) — per relation, from actual input
@@ -166,6 +166,12 @@ object Bench {
       .config("spark.sql.files.openCostInBytes", openCost)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
     // Truncation insurance: the harness parses one JSON line from stdout,
     // and BENCH_r05 lost it to a truncated tail ("parsed": null). Announce
     // the on-disk copy within the first lines of output so a clipped tail

@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
   * payload sizes that lookup dominates the codec itself
   * (`AudioSystem.write` 1.1 s vs 0.067 s for 5000 clips with a reused
   * provider — 16×; `getAudioInputStream` 0.65 → 0.036 s; PNG read/write
-  * ≈2× — see tools/CodecMicro). Each mapPartitions task obtains its
+  * ≈2× — OPTIMIZATION_r18.md §1). Each mapPartitions task obtains its
   * handles ONCE and reuses them row by row — the "amortize codec init per
   * task, not per row" discipline the operator scaladocs already name.
   * Artifact bytes are identical: `ImageIO`/`AudioSystem` delegate to

@@ -1431,8 +1431,8 @@ object TextOps {
     * Cost: O(tokens) per doc regardless of panel size — the earlier
     * literal-map `try_element_at` formulation was a LINEAR SCAN per gram
     * (O(tokens × |grams|), capped at 4096); the remaining bound is plan
-    * size: the gram set rides the stage's TASK BINARY, measured
-    * (graft.tools.PlanWeight, r15, PLANS.md table) at ~35 KB base +
+    * size: the gram set rides the stage's TASK BINARY, measured in r15
+    * (PLANS.md, "Compiled-literal plan weight" table) at ~35 KB base +
     * gram UTF-8 bytes × ~1.1 — 16.1 MB at 500k × ~29 B grams. The cap
     * is therefore TWO-DIMENSIONAL: `maxServeGrams` bounds the element
     * count and `maxServeGramBytes` bounds the total UTF-8 payload, so

@@ -1,8 +1,11 @@
 package graft.state
 
+import java.util.UUID
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.execution.streaming.state._
 import org.apache.spark.sql.types.StructType
 
@@ -190,18 +193,20 @@ abstract class GraftStateStoreProviderBase extends StateStoreProvider with Loggi
 
   override def stateStoreId: StateStoreId = storeId
 
+  /** The run id of the streaming query this provider serves; None outside
+    * a live query (direct SPI use), where no coordinator expects reports. */
+  private def queryRunId: Option[UUID] =
+    Option(hadoopConf.get(StreamExecution.RUN_ID_KEY)).map(UUID.fromString)
+
   /** Tell the coordinator a full snapshot for `version` is durable, so its
     * snapshot-lag detector doesn't flag this store (what the built-in
-    * RocksDB provider reports after every upload). Best-effort: outside a
-    * live streaming query there is no run id / coordinator endpoint.
+    * RocksDB provider reports after every upload). Best-effort.
     */
-  private[state] def reportSnapshotUploaded(version: Long): Unit = scala.util.Try {
-    import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
-    val runId = java.util.UUID.fromString(
-      hadoopConf.get(StreamExecution.RUN_ID_KEY))
-    GraftCoordinatorBridge.snapshotUploaded(storeId, runId, version)
-    GraftStateStoreProviderBase.lastSnapshotReport = Some((storeId, runId, version))
-  }
+  private[state] def reportSnapshotUploaded(version: Long): Unit =
+    queryRunId.foreach { runId => scala.util.Try {
+      GraftCoordinatorBridge.snapshotUploaded(storeId, runId, version)
+      GraftStateStoreProviderBase.lastSnapshotReport = Some((storeId, runId, version))
+    }}
 
   override def getStore(version: Long, uniqueId: Option[String]): StateStore = {
     require(version >= 0, s"Version cannot be $version")
@@ -305,9 +310,17 @@ abstract class GraftStateStoreProviderBase extends StateStoreProvider with Loggi
     row
   }
 
-  protected def decodeValue(info: CfInfo, bytes: Array[Byte]): UnsafeRow = {
-    if (bytes == null) return null
-    val payload = if (info.multiValue) MultiValue.first(bytes) else bytes
+  protected def decodeValue(info: CfInfo, bytes: Array[Byte]): UnsafeRow =
+    if (bytes == null) null
+    else valueRow(info, if (info.multiValue) MultiValue.first(bytes) else bytes)
+
+  /** Every value stored under one key: the one value of a plain column
+    * family, the whole list of a multi-value one. */
+  protected def decodeValues(info: CfInfo, bytes: Array[Byte]): Iterator[UnsafeRow] =
+    if (!info.multiValue) Iterator.single(decodeValue(info, bytes))
+    else MultiValue.decode(bytes).map(valueRow(info, _))
+
+  private def valueRow(info: CfInfo, payload: Array[Byte]): UnsafeRow = {
     val row = new UnsafeRow(info.valueSchema.fields.length)
     row.pointTo(payload, payload.length)
     row
@@ -419,11 +432,7 @@ abstract class GraftStateStoreProviderBase extends StateStoreProvider with Loggi
       if (bytes == null) Iterator.empty
       else {
         if (ttlApplies(colFamilyName)) expiry.touch(bk)
-        MultiValue.decode(bytes).map { payload =>
-          val row = new UnsafeRow(info.valueSchema.fields.length)
-          row.pointTo(payload, payload.length)
-          row
-        }
+        decodeValues(info, bytes)
       }
     }
 
@@ -487,10 +496,10 @@ abstract class GraftStateStoreProviderBase extends StateStoreProvider with Loggi
       state = State.Committed
       // Spark 4.1 commit validation (enforced e.g. under foreachBatch
       // sinks) expects every partition's commit reported to the
-      // coordinator, as the built-in providers do. Best-effort: outside a
-      // live streaming query (direct SPI use) the endpoint doesn't exist.
-      scala.util.Try(
-        StateStore.reportCommitToCoordinator(newVersion, storeId, hadoopConf))
+      // coordinator, as the built-in providers do. Spark logs, not throws,
+      // a failed report; outside a live query there is nothing to report to.
+      if (queryRunId.isDefined)
+        StateStore.reportCommitToCoordinator(newVersion, storeId, hadoopConf)
       newVersion
     }
 
@@ -501,9 +510,21 @@ abstract class GraftStateStoreProviderBase extends StateStoreProvider with Loggi
 
     override def release(): Unit = if (state == State.Updating) abort()
 
-    override def iterator(colFamilyName: String): StateStoreIterator[UnsafeRowPair] = {
+    override def iterator(colFamilyName: String): StateStoreIterator[UnsafeRowPair] =
+      scan(colFamilyName, cfInfo(colFamilyName), cfPrefix(colFamilyName))
+
+    override def prefixScan(prefixKey: UnsafeRow, colFamilyName: String): StateStoreIterator[UnsafeRowPair] = {
       val info = cfInfo(colFamilyName)
-      val raw = session.scan(cfPrefix(colFamilyName))
+      require(info.numPrefixCols > 0,
+        s"prefixScan requires a PrefixKeyScanStateEncoderSpec column family ($colFamilyName)")
+      scan(colFamilyName, info, physicalScanPrefix(colFamilyName, info, prefixKey))
+    }
+
+    /** The live, decoded entries of `colFamilyName` under a physical key
+      * prefix, with get()'s TTL visibility rules. */
+    private def scan(colFamilyName: String, info: CfInfo,
+                     prefix: Array[Byte]): StateStoreIterator[UnsafeRowPair] = {
+      val raw = session.scan(prefix)
       val ttlHere = ttlApplies(colFamilyName)
       val filtered = raw.filter { case (k, _) =>
         if (!ttlHere) true
@@ -517,23 +538,6 @@ abstract class GraftStateStoreProviderBase extends StateStoreProvider with Loggi
       // partially-consumed iterator (limit/take over state) would otherwise
       // leak a native RocksIterator, and closing the DB with live native
       // iterators can crash the JVM
-      new StateStoreIterator(pairs, () => raw.close())
-    }
-
-    override def prefixScan(prefixKey: UnsafeRow, colFamilyName: String): StateStoreIterator[UnsafeRowPair] = {
-      val info = cfInfo(colFamilyName)
-      require(info.numPrefixCols > 0,
-        s"prefixScan requires a PrefixKeyScanStateEncoderSpec column family ($colFamilyName)")
-      val raw = session.scan(physicalScanPrefix(colFamilyName, info, prefixKey))
-      val ttlHere = ttlApplies(colFamilyName)
-      val filtered = raw.filter { case (k, _) =>
-        if (!ttlHere) true
-        else if (ttlConf.expirySecs == 0) false
-        else !(ttlConf.strict && expiry.isExpired(new BytesKey(k)))
-      }
-      val pairs = filtered.map { case (k, v) =>
-        new UnsafeRowPair(decodeKey(colFamilyName, info, k), decodeValue(info, v))
-      }
       new StateStoreIterator(pairs, () => raw.close())
     }
 

@@ -608,11 +608,6 @@ class RocksDbStateStoreProvider extends GraftStateStoreProviderBase
       valueBytes: Array[Byte]): Iterator[UnsafeRow] = {
     val info = cfs.get(colFamilyName)
     require(info != null, s"unknown column family $colFamilyName")
-    if (!info.multiValue) Iterator.single(decodeValue(info, valueBytes))
-    else MultiValue.decode(valueBytes).map { payload =>
-      val row = new UnsafeRow(info.valueSchema.fields.length)
-      row.pointTo(payload, payload.length)
-      row
-    }
+    decodeValues(info, valueBytes)
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.Encoder
+import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.streaming._
 
 /** The per-(band, bucket) compare-then-join processor of the streaming
@@ -63,5 +63,49 @@ private[streaming] object StateTtl {
   def apply(ttl: Option[java.time.Duration]): (TTLConfig, TimeMode) = ttl match {
     case Some(d) => (TTLConfig(d), TimeMode.ProcessingTime())
     case None    => (TTLConfig.NONE, TimeMode.None())
+  }
+}
+
+/** The per-key event-time reorder buffer of the out-of-order operators
+  * ([[StreamingFunnel.OrderedFunnelProcessor]],
+  * [[StreamingAttribution.OrderedLastTouchProcessor]]): events wait in a
+  * `buffer` MapState keyed by their ordinal until the watermark passes
+  * their event time, so each operator folds them in ordinal order. A
+  * `minTs` ValueState holds the earliest buffered event time, which keeps
+  * re-arming the key's one timer O(1) per batch instead of a buffer scan.
+  * Build it in the processor's `init`: the two state names are part of
+  * the checkpoint schema.
+  */
+private[streaming] final class EventTimeBuffer[V](
+    handle: StatefulProcessorHandle, encoder: Encoder[V], tsMs: V => Long) {
+  private val buffer = handle.getMapState[Long, V]("buffer",
+    Encoders.scalaLong, encoder, TTLConfig.NONE)
+  private val minTs = handle.getValueState[Long]("minTs",
+    Encoders.scalaLong, TTLConfig.NONE)
+
+  private def rearm(expiryMs: Long): Unit = {
+    handle.listTimers().foreach(t => handle.deleteTimer(t.asInstanceOf[Long]))
+    handle.registerTimer(expiryMs)
+    minTs.update(expiryMs)
+  }
+
+  /** Buffer `(ordinal, event)` pairs and arm the timer at the earliest
+    * buffered event time. */
+  def add(events: Iterator[(Long, V)]): Unit = {
+    var newMin = if (minTs.exists()) minTs.get() else Long.MaxValue
+    events.foreach { case (ord, v) =>
+      buffer.updateValue(ord, v)
+      if (tsMs(v) < newMin) newMin = tsMs(v)
+    }
+    if (newMin != Long.MaxValue) rearm(newMin)
+  }
+
+  /** Remove the entries whose event time the watermark has passed and
+    * return them in ordinal order; the timer is re-armed for the rest. */
+  def takeRipe(watermarkMs: Long): Seq[(Long, V)] = {
+    val (ripe, rest) = buffer.iterator().toSeq.partition(e => tsMs(e._2) <= watermarkMs)
+    ripe.foreach(e => buffer.removeKey(e._1))
+    if (rest.nonEmpty) rearm(rest.map(e => tsMs(e._2)).min) else minTs.clear()
+    ripe.sortBy(_._1)
   }
 }

@@ -116,45 +116,28 @@ object StreamingAttribution {
                                   horizonMs: Option[Long])
       extends StatefulProcessor[Long, TimedAttrEvent, Attribution] {
     @transient private var lastSource: ValueState[SourceMark] = _
-    @transient private var buffer: MapState[Long, BufferedAttr] = _
-    @transient private var minTs: ValueState[Long] = _
+    @transient private var buffer: EventTimeBuffer[BufferedAttr] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       lastSource = getHandle.getValueState[SourceMark]("lastSource",
         Encoders.product[SourceMark], TTLConfig.NONE)
-      buffer = getHandle.getMapState[Long, BufferedAttr]("buffer",
-        Encoders.scalaLong, Encoders.product[BufferedAttr], TTLConfig.NONE)
-      minTs = getHandle.getValueState[Long]("minTs",
-        Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def rearm(expiryMs: Long): Unit = {
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-      getHandle.registerTimer(expiryMs)
-      minTs.update(expiryMs)
+      buffer = new EventTimeBuffer(getHandle, Encoders.product[BufferedAttr], _.tsMs)
     }
 
     override def handleInputRows(key: Long, rows: Iterator[TimedAttrEvent],
                                  timerValues: TimerValues): Iterator[Attribution] = {
-      var newMin = if (minTs.exists()) minTs.get() else Long.MaxValue
-      rows.foreach { e =>
-        buffer.updateValue(e.eventId, BufferedAttr(e.eventType, e.ts.getTime))
-        if (e.ts.getTime < newMin) newMin = e.ts.getTime
-      }
-      if (newMin != Long.MaxValue) rearm(newMin)
+      buffer.add(rows.map(e => e.eventId -> BufferedAttr(e.eventType, e.ts.getTime)))
       Iterator.empty
     }
 
     override def handleExpiredTimer(key: Long, timerValues: TimerValues,
                                     expiredTimerInfo: ExpiredTimerInfo): Iterator[Attribution] = {
       val wm = timerValues.getCurrentWatermarkInMs()
-      val all = buffer.iterator().map { case (ord, b) => (ord, b) }.toSeq
-      val (ripe, rest) = all.partition(_._2.tsMs <= wm)
       val loaded: Option[SourceMark] =
         if (lastSource.exists()) Some(lastSource.get()) else None
       var last = loaded
       val out = scala.collection.mutable.ArrayBuffer.empty[Attribution]
-      ripe.sortBy(_._1).foreach { case (ord, b) =>
+      buffer.takeRipe(wm).foreach { case (ord, b) =>
         if (b.eventType == targetType)
           // the attribution window is event-time: credit only a source
           // within `horizonMs` of the TARGET's own event time — an
@@ -163,7 +146,6 @@ object StreamingAttribution {
           out += Attribution(key, ord,
             last.filter(m => horizonMs.forall(h => b.tsMs - m.tsMs <= h)).map(_.ord))
         if (b.eventType == sourceType) last = Some(SourceMark(ord, b.tsMs))
-        buffer.removeKey(ord)
       }
       // rewrite only on a NEW source event (no pointless state churn)
       if (last != loaded) last.foreach(lastSource.update)
@@ -172,7 +154,6 @@ object StreamingAttribution {
       // clear it so dormant entities don't hold state forever
       if (horizonMs.exists(h => last.exists(m => wm - m.tsMs > h)))
         lastSource.clear()
-      if (rest.nonEmpty) rearm(rest.map(_._2.tsMs).min) else minTs.clear()
       out.iterator
     }
   }

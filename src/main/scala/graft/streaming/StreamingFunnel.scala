@@ -94,60 +94,38 @@ object StreamingFunnel {
     *
     * Scale notes: buffer size per entity is bounded by its event rate ×
     * watermark delay (MapState rows, disk-resident under the RocksDB
-    * provider); each finalization drains only ripe entries. A
-    * `minBufferedTs` ValueState keeps timer re-registration O(1) per
-    * batch instead of a buffer scan; the full scan happens only inside
-    * the drain, which already iterates ripe entries.
+    * provider); each finalization drains only ripe entries (see
+    * [[EventTimeBuffer]]).
     */
   class OrderedFunnelProcessor(steps: Seq[String])
       extends StatefulProcessor[Long, TimedFunnelEvent, StepAdvance] {
     @transient private var progress: ValueState[Progress] = _
-    @transient private var buffer: MapState[Long, Buffered] = _
-    @transient private var minTs: ValueState[Long] = _
+    @transient private var buffer: EventTimeBuffer[Buffered] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
       progress = getHandle.getValueState[Progress]("progress",
         Encoders.product[Progress], TTLConfig.NONE)
-      buffer = getHandle.getMapState[Long, Buffered]("buffer",
-        Encoders.scalaLong, Encoders.product[Buffered], TTLConfig.NONE)
-      minTs = getHandle.getValueState[Long]("minTs",
-        Encoders.scalaLong, TTLConfig.NONE)
-    }
-
-    private def rearm(expiryMs: Long): Unit = {
-      getHandle.listTimers().foreach(t => getHandle.deleteTimer(t.asInstanceOf[Long]))
-      getHandle.registerTimer(expiryMs)
-      minTs.update(expiryMs)
+      buffer = new EventTimeBuffer(getHandle, Encoders.product[Buffered], _.tsMs)
     }
 
     override def handleInputRows(key: Long, rows: Iterator[TimedFunnelEvent],
                                  timerValues: TimerValues): Iterator[StepAdvance] = {
-      var newMin = if (minTs.exists()) minTs.get() else Long.MaxValue
-      rows.foreach { e =>
-        buffer.updateValue(e.eventId, Buffered(e.eventType, e.ts.getTime))
-        if (e.ts.getTime < newMin) newMin = e.ts.getTime
-      }
-      if (newMin != Long.MaxValue) rearm(newMin)
+      buffer.add(rows.map(e => e.eventId -> Buffered(e.eventType, e.ts.getTime)))
       Iterator.empty
     }
 
     override def handleExpiredTimer(key: Long, timerValues: TimerValues,
                                     expiredTimerInfo: ExpiredTimerInfo): Iterator[StepAdvance] = {
-      val wm = timerValues.getCurrentWatermarkInMs()
-      val all = buffer.iterator().map { case (ord, b) => (ord, b) }.toSeq
-      val (ripe, rest) = all.partition(_._2.tsMs <= wm)
       var st = if (progress.exists()) progress.get() else Progress(-1, Long.MinValue)
       val out = scala.collection.mutable.ArrayBuffer.empty[StepAdvance]
-      ripe.sortBy(_._1).foreach { case (ord, b) =>
+      buffer.takeRipe(timerValues.getCurrentWatermarkInMs()).foreach { case (ord, b) =>
         if (st.step + 1 < steps.length && b.eventType == steps(st.step + 1) &&
             ord > st.lastOrd) {
           st = Progress(st.step + 1, ord)
           out += StepAdvance(key, st.step, ord)
         }
-        buffer.removeKey(ord)
       }
       if (out.nonEmpty) progress.update(st)
-      if (rest.nonEmpty) rearm(rest.map(_._2.tsMs).min) else minTs.clear()
       out.iterator
     }
   }

@@ -12,8 +12,52 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 /** The provider must report zip-snapshot uploads to the
   * StateStoreCoordinator so its snapshot-lag detector sees this store as
   * current (the built-in RocksDB provider does the same after uploads).
+  * Outside a live query (direct SPI use) it reports nothing.
   */
 class SnapshotUploadReportSuite extends AnyFunSuite {
+
+  test("direct-SPI commits report nothing and log no failed commit report") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => Log4jLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    import org.apache.spark.sql.execution.streaming.state.StateStore
+    import StateTestHelper._
+
+    // Spark sets up log4j lazily on the first log call and replaces the
+    // loggers' appenders when it does; do it now, before attaching ours
+    new org.apache.spark.internal.Logging { logInfo("init") }
+    val captured = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val appender = new AbstractAppender("commit-report-capture", null, null, false,
+        Property.EMPTY_ARRAY) {
+      override def append(event: LogEvent): Unit =
+        captured.add(event.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    val loggerName = StateStore.getClass.getName.stripSuffix("$")
+    Configurator.setLevel(loggerName, Level.WARN)
+    val logger = LogManager.getLogger(loggerName).asInstanceOf[Log4jLogger]
+    logger.addAppender(appender)
+    try {
+      Seq[() => GraftStateStoreProviderBase](
+        () => new RocksDbStateStoreProvider, () => new KvStateStoreProvider).foreach { make =>
+        val dir = Files.createTempDirectory("graft-commit-report").toString
+        val provider = initProvider(make(), dir)
+        try {
+          commitVersions(provider, 1, 3)
+          val store = provider.getStore(3, None)
+          assert(contents(store) === model(3))
+          store.abort()
+        } finally provider.close()
+      }
+      assert(!captured.asScala.exists(_.contains("Failed to report StateStore commit")),
+        s"direct-SPI commits tried to report to a coordinator: ${captured.asScala.toList}")
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+  }
 
   test("rocksdb provider reports cadence snapshots to the coordinator") {
     val spark = SparkSession.builder()
