@@ -27,12 +27,18 @@ import com.google.common.collect.MapMaker
   */
 trait KvClient {
   def get(key: Array[Byte]): Array[Byte]
+  /** Values of `keys` in order, null for an absent key — Redis MGET. The
+    * default costs one `get` per key; a network client overrides it with
+    * one round trip per chunk of keys. */
+  def mget(keys: Seq[Array[Byte]]): Seq[Array[Byte]] = keys.map(get)
   /** Apply puts and deletes atomically (Redis MULTI/EXEC shape,
     * reference RedisStateStoreProvider.scala:100-133). */
   def writeBatch(puts: Seq[(Array[Byte], Array[Byte])], deletes: Seq[Array[Byte]]): Unit
   /** All (key, value) pairs whose key starts with `prefix` — the server-side
-    * analog of Redis SCAN MATCH (NOT the reference's O(n·roundtrip)
-    * KEYS + per-key GET). */
+    * analog of Redis SCAN MATCH. [[KvSessionBackend]] never calls it (nor
+    * `deletePrefix`): it reaches every key through per-version key indexes,
+    * so a store with no ordered scan can serve it through get, mget and
+    * writeBatch alone. */
   def scanPrefix(prefix: Array[Byte]): Iterator[(Array[Byte], Array[Byte])]
   def deletePrefix(prefix: Array[Byte]): Unit
   def close(): Unit
@@ -86,10 +92,18 @@ object EmbeddedKvServer {
   * commit — O(total state) writes per batch, which defeats an external KV
   * at any real state size. Now commit writes ∝ the batch delta, and the
   * chain walk is bounded by the base cadence.
+  *
+  * Every version also carries the list of keys it wrote (its key index,
+  * `<prefix>:__keys__:<v>`), so the backend reaches any set of keys by
+  * name: a point read is one MGET across the chain, a chain resolution is
+  * one MGET of the chain's indexes plus one of the keys they list, and GC
+  * deletes the listed keys. No path scans the server, whose other stores
+  * would otherwise add to every scan's cost.
   */
 final class KvSessionBackend(storePrefix: String, client: KvClient,
                              baseInterval: Int = KvSessionBackend.BaseInterval)
     extends SessionBackend with org.apache.spark.internal.Logging {
+  import KvSessionBackend.{decodeIndex, encodeIndex}
 
   private val Sep: Byte = ':'
   private def versionPrefix(v: Long): Array[Byte] = {
@@ -123,6 +137,16 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
     * stats never need a chain resolution.
     */
   private def statsKey(v: Long): Array[Byte] = s"$storePrefix:__stats__:$v".getBytes("UTF-8")
+  /** The keys (sans version prefix) version `v` holds entries for, puts and
+    * tombstones alike, length-framed. Written in the same atomic batch as
+    * the version's data and deleted with it, so it lists exactly the keys
+    * under `<prefix>:<v>:`.
+    */
+  private def indexKey(v: Long): Array[Byte] = s"$storePrefix:__keys__:$v".getBytes("UTF-8")
+
+  /** One round trip for `keys`, none for no keys. */
+  private def mget(keys: Seq[Array[Byte]]): Seq[Array[Byte]] =
+    if (keys.isEmpty) Seq.empty else client.mget(keys)
 
   private def readStats(v: Long): Option[(Long, Long)] =
     Option(client.get(statsKey(v))).map { raw =>
@@ -139,10 +163,8 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
   private def countStats(state: TreeMap[BytesKey, Array[Byte]]): (Long, Long) =
     (state.size.toLong, state.iterator.map { case (k, v) => entrySize(k.bytes, v) }.sum)
 
-  private def readGcEpoch(): Long = {
-    val raw = client.get(gcEpochKey)
+  private def parseGcEpoch(raw: Array[Byte]): Long =
     if (raw == null) 0L else new String(raw, "UTF-8").toLong
-  }
 
   // value framing inside a version keyspace
   private val TagPut: Byte = 0
@@ -168,73 +190,80 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
     */
   private val registryLock = KvSessionBackend.registryLock(storePrefix)
 
-  private def readVersionSet(key: Array[Byte]): Set[Long] = {
-    val raw = client.get(key)
+  private def parseVersionSet(raw: Array[Byte]): Set[Long] =
     if (raw == null) Set.empty
     else new String(raw, "UTF-8").split(',').filter(_.nonEmpty).map(_.toLong).toSet
-  }
 
   private def encodeVersionSet(vs: Set[Long]): Array[Byte] =
     vs.toSeq.sorted.mkString(",").getBytes("UTF-8")
 
-  private def committed(): Set[Long] = readVersionSet(versionsKey)
-  private def bases(): Set[Long] = readVersionSet(basesKey)
-
-  override def committedVersions(): Seq[Long] = committed().toSeq.sorted
+  override def committedVersions(): Seq[Long] = parseVersionSet(client.get(versionsKey)).toSeq.sorted
 
   /** Versions to consult for a read as of `asOf`, OLDEST FIRST, starting at
     * the newest base ≤ asOf (or the oldest committed version if no base —
-    * the first commit acts as one). `bs` is read only when needed.
+    * the first commit acts as one).
     */
-  private def chainOf(committedVs: Set[Long], bs: => Set[Long], asOf: Long): Seq[Long] = {
+  private def chainOf(committedVs: Set[Long], bs: Set[Long], asOf: Long): Seq[Long] = {
     val vs = committedVs.filter(_ <= asOf)
     if (vs.isEmpty) return Seq.empty
-    val start = bs.filter(_ <= asOf) match {
-      case b if b.nonEmpty => b.max
-      case _ => vs.min
-    }
+    val start = bs.filter(_ <= asOf).maxOption.getOrElse(vs.min)
     vs.filter(_ >= start).toSeq.sorted
   }
 
-  private def chainAsOf(asOf: Long): Seq[Long] = chainOf(committed(), bases(), asOf)
-
-  private def strip(full: Array[Byte], prefix: Array[Byte]): Array[Byte] =
-    java.util.Arrays.copyOfRange(full, prefix.length, full.length)
-
-  /** Newest→oldest point read through `chainNewestFirst`: the first
-    * version with an entry decides (Some(None) = tombstone, None = no
-    * entry anywhere), plus the number of keyspaces probed.
-    */
-  private def lookup(chainNewestFirst: IndexedSeq[Long],
-                     key: Array[Byte]): (Option[Option[Array[Byte]]], Int) = {
-    var i = 0
-    var decided: Option[Option[Array[Byte]]] = None
-    while (decided.isEmpty && i < chainNewestFirst.length) {
-      val framed = client.get(versionPrefix(chainNewestFirst(i)) ++ key)
-      if (framed != null) decided = Some(unframe(framed))
-      i += 1
-    }
-    (decided, i)
+  private def chainAsOf(asOf: Long): Seq[Long] = {
+    val Seq(vs, bs) = client.mget(Seq(versionsKey, basesKey))
+    chainOf(parseVersionSet(vs), parseVersionSet(bs), asOf)
   }
 
-  /** Full resolved state through `chain` (server side only, no overlay). */
-  private def resolve(chain: Seq[Long], prefix: Array[Byte]): TreeMap[BytesKey, Array[Byte]] = {
-    var acc = TreeMap.empty[BytesKey, Array[Byte]](ByteOrdering)
-    chain.foreach { v =>
-      val p = versionPrefix(v)
-      client.scanPrefix(p ++ prefix).foreach { case (k, framed) =>
-        val key = new BytesKey(strip(k, p))
-        unframe(framed) match {
-          case Some(value) => acc += (key -> value)
-          case None => acc -= key
-        }
-      }
+  /** The first entry in one key's newest-first chain read: Some(None) = a
+    * tombstone, None = no entry anywhere; plus the keyspaces it consulted.
+    */
+  private def firstEntry(framedNewestFirst: Seq[Array[Byte]]): (Option[Option[Array[Byte]]], Int) =
+    framedNewestFirst.indexWhere(_ != null) match {
+      case -1 => (None, framedNewestFirst.size)
+      case i => (Some(unframe(framedNewestFirst(i))), i + 1)
     }
-    acc
+
+  private def missingIndex(v: Long): IllegalStateException =
+    new IllegalStateException(s"state version $v of $storePrefix has no key index " +
+      s"($storePrefix:__keys__:$v), so its keys cannot be enumerated")
+
+  /** The key indexes of `vs`, in order, in one round trip. A version
+    * without one fails loudly: reading it as empty would drop its entries.
+    */
+  private def readIndexes(vs: Seq[Long]): Seq[Seq[Array[Byte]]] =
+    vs.zip(mget(vs.map(indexKey))).map {
+      case (v, null) => throw missingIndex(v)
+      case (_, raw) => decodeIndex(raw)
+    }
+
+  /** Full resolved state through `chain` (server side only, no overlay). */
+  private def resolve(chain: Seq[Long], prefix: Array[Byte]): TreeMap[BytesKey, Array[Byte]] =
+    resolveIndexed(chain.zip(readIndexes(chain)), prefix)
+
+  /** [[resolve]] over indexes already read: each listed key is read once,
+    * from the newest version listing it.
+    */
+  private def resolveIndexed(chain: Seq[(Long, Seq[Array[Byte]])],
+                             prefix: Array[Byte]): TreeMap[BytesKey, Array[Byte]] = {
+    val seen = scala.collection.mutable.HashSet.empty[BytesKey]
+    val newest = chain.reverseIterator.flatMap { case (v, keys) =>
+      val p = versionPrefix(v)
+      keys.iterator.filter(ByteOrdering.hasPrefix(_, prefix)).map(new BytesKey(_))
+        .filter(seen.add).map(k => (v, k, p ++ k.bytes))
+    }.toVector
+    val acc = TreeMap.newBuilder[BytesKey, Array[Byte]](ByteOrdering)
+    newest.iterator.zip(mget(newest.map(_._3)).iterator).foreach {
+      case ((v, _, _), null) =>
+        throw new IllegalStateException(
+          s"a key listed in the index of state version $v of $storePrefix is missing")
+      case ((_, k, _), framed) => unframe(framed).foreach(value => acc += (k -> value))
+    }
+    acc.result()
   }
 
   override def open(loadVersion: Long, commitVersion: Long): StoreSession = {
-    // lenient ladder: chainAsOf resolves through the newest committed
+    // lenient ladder: the chain resolves through the newest committed
     // version ≤ loadVersion; empty chain → empty store.
     // Per-key get() walks this chain captured at open time WITHOUT the
     // registry lock (a lock per state lookup would serialize task threads
@@ -247,8 +276,13 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
     // The residual risk — a session held open across ≥2 maintenance
     // cycles reading a GC'd keyspace — is DETECTED via the GC epoch
     // tripwire in get() below rather than silently returning wrong data.
-    val readChainNewestFirst: IndexedSeq[Long] = chainAsOf(loadVersion).reverse.toIndexedSeq
-    val gcEpochAtOpen = readGcEpoch()
+    // Both registries and the epoch come in one round trip, the epoch
+    // read last.
+    val Seq(vsAtOpen, bsAtOpen, epochAtOpen) = client.mget(Seq(versionsKey, basesKey, gcEpochKey))
+    val readChainNewestFirst: IndexedSeq[Long] =
+      chainOf(parseVersionSet(vsAtOpen), parseVersionSet(bsAtOpen), loadVersion).reverse.toIndexedSeq
+    val chainPrefixes = readChainNewestFirst.map(versionPrefix)
+    val gcEpochAtOpen = parseGcEpoch(epochAtOpen)
     // the loaded version's stats, carried with it; a version written
     // before stats were (older checkpoints) costs one full resolution
     val loadedStats: (Long, Long) = readChainNewestFirst.headOption match {
@@ -281,17 +315,15 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
         * passed since open(), a chained keyspace may be physically gone —
         * a get() that consulted more than the newest chained keyspace
         * could then have skipped a deleted tombstone and resurrected an
-        * older value. One extra KV get per exposed read (the epoch key);
-        * the full registry check runs once per new epoch. Fails loudly
-        * (task retry re-opens with a fresh chain) instead of returning
-        * silently wrong state.
+        * older value. `epoch` rides on the read itself; the registry check
+        * runs once per new epoch. Fails loudly (task retry re-opens with a
+        * fresh chain) instead of returning silently wrong state.
         */
-      private def checkChainIntact(): Unit = {
-        if (readChainNewestFirst.isEmpty) return
-        val epoch = readGcEpoch()
+      private def checkChainIntact(epoch: Long): Unit = {
         if (epoch == verifiedEpoch) return
-        val committedNow = committed()
-        val pending = readVersionSet(gcPendingKey)
+        val Seq(vsNow, pendingNow) = client.mget(Seq(versionsKey, gcPendingKey))
+        val committedNow = parseVersionSet(vsNow)
+        val pending = parseVersionSet(pendingNow)
         val missing = readChainNewestFirst
           .filterNot(v => committedNow.contains(v) || pending.contains(v))
         if (missing.nonEmpty && epoch >= gcEpochAtOpen + 2)
@@ -321,11 +353,17 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
           case Some(Some(v)) => v
           case Some(None) => null
           case None =>
-            val (decided, probed) = lookup(readChainNewestFirst, key)
-            // any probe that fell past the newest chained keyspace is the
-            // exact shape a GC'd version (lost tombstone) produces
-            if (probed > 1 || decided.isEmpty) checkChainIntact()
-            val value = decided.flatten
+            // one round trip: the key in every chained keyspace, newest
+            // first, then the GC epoch — read after the data, as the
+            // tripwire needs
+            val value = if (chainPrefixes.isEmpty) None else {
+              val framed = client.mget(chainPrefixes.map(_ ++ key) :+ gcEpochKey)
+              val (decided, probed) = firstEntry(framed.init)
+              // any probe that fell past the newest chained keyspace is the
+              // exact shape a GC'd version (lost tombstone) produces
+              if (probed > 1 || decided.isEmpty) checkChainIntact(parseGcEpoch(framed.last))
+              decided.flatten
+            }
             priorSize(bk) = value.fold(-1L)(entrySize(key, _))
             value.orNull
         }
@@ -338,9 +376,9 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
         overlay += (new BytesKey(key) -> None)
 
       def scan(prefix: Array[Byte]): KvScanIterator = {
-        // registryLock: chain resolution + version-keyspace scans must be
+        // registryLock: chain resolution + version-keyspace reads must be
         // atomic w.r.t. maintenance — otherwise two GC cycles between
-        // computing the chain and scanning it can physically delete a
+        // computing the chain and reading it can physically delete a
         // chained version (epoch-deferred GC only protects chains for ONE
         // cycle), silently dropping that version's entries — fatally, its
         // TOMBSTONES (caught by KvConcurrencySuite: a baked-in base
@@ -357,17 +395,22 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
         KvScanIterator.wrap(merged.iterator.map { case (k, v) => (k.bytes, v) })
       }
 
-      /** Fill in the prior size of every overlay key no get() has read.
-        * Callers hold registryLock and pass a chain resolved under it —
-        * NOT the open-time chain, which maintenance may have GC'd by now
-        * (the get() tripwire only guards reads through that chain).
+      /** Fill in the prior size of every overlay key no get() has read, in
+        * one round trip. Callers hold registryLock and pass a chain
+        * resolved under it — NOT the open-time chain, which maintenance
+        * may have GC'd by now (the get() tripwire only guards reads
+        * through that chain).
         */
       private def probeUnread(chain: => Seq[Long]): Unit = {
         val unread = overlay.keysIterator.filterNot(priorSize.contains).toVector
         if (unread.nonEmpty) {
-          val newestFirst = chain.reverse.toIndexedSeq
-          unread.foreach { k =>
-            priorSize(k) = lookup(newestFirst, k.bytes)._1.flatten.fold(-1L)(entrySize(k.bytes, _))
+          val prefixes = chain.reverse.map(versionPrefix)
+          val priors =
+            if (prefixes.isEmpty) Iterator.continually(None)
+            else client.mget(for (k <- unread; p <- prefixes) yield p ++ k.bytes)
+              .grouped(prefixes.size).map(firstEntry(_)._1.flatten)
+          unread.iterator.zip(priors).foreach { case (k, value) =>
+            priorSize(k) = value.fold(-1L)(entrySize(k.bytes, _))
           }
         }
       }
@@ -387,17 +430,19 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
         val writePrefix = versionPrefix(commitVersion)
         val isBase = baseInterval > 0 && commitVersion % baseInterval == 0
         // the WHOLE commit — including the cadence-base materialization —
-        // runs under registryLock: the base's chain resolution + scans must
-        // be atomic w.r.t. maintenance GC, or a chained version (and its
-        // tombstones) can be physically deleted between computing the chain
-        // and scanning it, baking resurrected keys into the base
+        // runs under registryLock: the base's chain resolution + reads
+        // must be atomic w.r.t. maintenance GC, or a chained version (and
+        // its tombstones) can be physically deleted between computing the
+        // chain and reading it, baking resurrected keys into the base
         // (KvConcurrencySuite caught exactly this)
         registryLock.synchronized {
-          // each registry is read once per commit
-          val vs = committed()
-          lazy val bs = bases()
+          // both registries and an earlier attempt's index in one round trip
+          val Seq(vsRaw, bsRaw, priorIndex) =
+            client.mget(Seq(versionsKey, basesKey, indexKey(commitVersion)))
+          val vs = parseVersionSet(vsRaw)
+          val bs = parseVersionSet(bsRaw)
           lazy val chain = chainOf(vs, bs, loadVersion)
-          val (puts, stats): (Seq[(Array[Byte], Array[Byte])], (Long, Long)) =
+          val (entries, stats): (Seq[(BytesKey, Array[Byte])], (Long, Long)) =
             if (isBase) {
               // cadence base: materialize the full resolved state (amortized
               // O(state)/interval, like the RocksDB zip-snapshot cadence) so
@@ -407,34 +452,37 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
                 case (k, Some(v)) => full += (k -> v)
                 case (k, None) => full -= k
               }
-              (full.iterator.map { case (k, v) => (writePrefix ++ k.bytes, framePut(v)) }.toSeq,
-                countStats(full))
+              (full.iterator.map { case (k, v) => (k, framePut(v)) }.toSeq, countStats(full))
             } else {
               // delta commit: writes and stats work ∝ this batch's changes
               probeUnread(chain)
               (overlay.iterator.map {
-                case (k, Some(v)) => (writePrefix ++ k.bytes, framePut(v))
-                case (k, None) => (writePrefix ++ k.bytes, tombstone)
+                case (k, Some(v)) => (k, framePut(v))
+                case (k, None) => (k, tombstone)
               }.toSeq, netStats())
             }
           // replayed commit (batch re-run after restart): the recomputed
           // delta may differ from the earlier attempt, and plain overwrites
           // would leave the old attempt's extra keys alive in this version
-          // and every later chain read. Delete them in the SAME atomic
-          // batch (puts win: deletes exclude any key being re-put).
+          // and every later chain read. Delete them — the earlier index
+          // minus this attempt's keys — in the SAME atomic batch.
+          if (priorIndex == null && vs.contains(commitVersion)) throw missingIndex(commitVersion)
           val staleDeletes: Seq[Array[Byte]] =
-            if (vs.contains(commitVersion)) {
-              val putKeys = puts.iterator.map(p => new BytesKey(p._1)).toSet
-              client.scanPrefix(writePrefix).map(_._1)
-                .filterNot(k => putKeys.contains(new BytesKey(k))).toSeq
-            } else Seq.empty
-          // one atomic batch: the version's data, its stats and both
-          // registry updates
+            if (priorIndex == null) Seq.empty
+            else {
+              val written = entries.iterator.map(_._1).toSet
+              decodeIndex(priorIndex).filterNot(k => written.contains(new BytesKey(k)))
+                .map(writePrefix ++ _)
+            }
+          // one atomic batch: the version's data, its index, its stats and
+          // both registry updates
           val registryPuts = Seq(
+            indexKey(commitVersion) -> encodeIndex(entries.map(_._1.bytes)),
             versionsKey -> encodeVersionSet(vs + commitVersion),
             statsKey(commitVersion) -> encodeStats(stats)) ++
             (if (isBase) Seq(basesKey -> encodeVersionSet(bs + commitVersion)) else Seq.empty)
-          client.writeBatch(puts ++ registryPuts, staleDeletes)
+          client.writeBatch(
+            entries.map { case (k, v) => (writePrefix ++ k.bytes, v) } ++ registryPuts, staleDeletes)
           committedStats = Some(stats)
         }
       }
@@ -460,72 +508,79 @@ final class KvSessionBackend(storePrefix: String, client: KvClient,
     * yet reached) is one materialized at the newest version ≤ the
     * horizon, then every older version's keyspace is dropped.
     *
-    * Crash- and reader-safety (Spark runs this on a background thread
-    * concurrent with task-thread reads):
-    *  1. A materialized base is WRITTEN FIRST, in one atomic batch with
-    *     the bases-registry flip. The materialized values equal the
-    *     chain-resolved values at the horizon, so a concurrent reader
-    *     folding an old chain through the horizon keyspace sees identical
-    *     results whether it observes the pre-write deltas, the post-write
-    *     materialization, or any prefix of the batch's effect — there is
-    *     no window where the horizon keyspace is empty. A crash before
-    *     the flip leaves only redundant-but-equal overwrites behind.
-    *  2. Dead tombstones in the horizon keyspace (keys absent from the
-    *     materialization) are deleted only AFTER the flip — until then
-    *     they are still semantically correct (absent key ↔ tombstone).
+    * The whole run is ONE atomic batch after its reads: the materialized
+    * base, the base's dead entries, the keyspaces GC'd now and the
+    * registry updates. Crash- and reader-safety (Spark runs this on a
+    * background thread concurrent with task-thread reads):
+    *  1. A crash leaves nothing or everything. A run that fails before its
+    *     batch applied is simply redone by the next one, which finds the
+    *     same horizon still unflipped.
+    *  2. The materialized values equal the chain-resolved values at the
+    *     horizon, so a reader folding an old chain through the horizon
+    *     keyspace sees identical results before and after. The horizon's
+    *     dead entries (tombstones below the new base: listed in its index,
+    *     absent from the materialization) go in the same batch as the flip
+    *     that makes new chains start at the horizon; the index shrinks to
+    *     the materialization with them, so it always lists every key the
+    *     keyspace holds.
     *  3. Version GC is EPOCH-DEFERRED: this run only DEREGISTERS versions
     *     below the horizon (removes them from the registries, so no new
-    *     chain can reference them) and physically deletes the keyspaces
-    *     (and stats) deregistered by the PREVIOUS run. Any chain — even
-    *     one computed from a registry read racing the shrink — only
-    *     contains versions deregistered at most one run ago, whose data is
-    *     still intact, so concurrent chain reads never dangle. The
-    *     remaining exposure is a session that stays open across a FULL
-    *     maintenance cycle while reading a version below the retention
-    *     horizon — outside the SPI contract (Spark's maintenance interval
-    *     dwarfs a micro-batch), same as the RocksDB checkpoint GC.
+    *     chain can reference them) and physically deletes the keyspaces —
+    *     the keys their indexes list, the indexes and the stats —
+    *     deregistered by the PREVIOUS run. Any chain — even one computed
+    *     from a registry read racing the shrink — only contains versions
+    *     deregistered at most one run ago, whose data is still intact, so
+    *     concurrent chain reads never dangle. The remaining exposure is a
+    *     session that stays open across a FULL maintenance cycle while
+    *     reading a version below the retention horizon — outside the SPI
+    *     contract (Spark's maintenance interval dwarfs a micro-batch), same
+    *     as the RocksDB checkpoint GC.
     */
   override def doMaintenance(minVersionsToRetain: Int): Unit = registryLock.synchronized {
-    val vs = committed()
+    val Seq(vsRaw, bsRaw, pendingRaw, epochRaw) =
+      client.mget(Seq(versionsKey, basesKey, gcPendingKey, gcEpochKey))
+    val vs = parseVersionSet(vsRaw)
     if (vs.isEmpty) return
-    val bs = bases()
+    val bs = parseVersionSet(bsRaw)
     val earliest = math.max(vs.max - minVersionsToRetain + 1, vs.min)
-    val horizon = bs.filter(_ <= earliest).maxOption.getOrElse {
-      val h = vs.filter(_ <= earliest).max // newest version ≤ earliest
-      val full = resolve(chainOf(vs, bs, h), Array.emptyByteArray)
-      val p = versionPrefix(h)
-      // (1) base entries + registry flip, one atomic batch, before any delete
-      client.writeBatch(
-        full.iterator.map { case (k, v) => (p ++ k.bytes, framePut(v)) }.toSeq ++ Seq(
-          basesKey -> encodeVersionSet(bs + h),
-          statsKey(h) -> encodeStats(countStats(full))),
-        Seq.empty)
-      // (2) now-dead delta entries: keys not in the materialization
-      // (tombstones below a base). framePut overwrites already replaced
-      // every live delta entry in the batch above.
-      val dead = client.scanPrefix(p).map(_._1)
-        .filterNot(k => full.contains(new BytesKey(strip(k, p)))).toSeq
-      if (dead.nonEmpty) client.writeBatch(Seq.empty, dead)
-      h
+    val cadenceBase = bs.filter(_ <= earliest).maxOption
+    val horizon = cadenceBase.getOrElse(vs.filter(_ <= earliest).max) // newest version ≤ earliest
+    // what the PREVIOUS run deregistered: no live chain can reference it
+    val toDelete = parseVersionSet(pendingRaw).filter(_ < horizon).toSeq.sorted
+    // the chain to materialize at the horizon, if no base is old enough;
+    // its indexes and the GC'd versions' come in one round trip
+    val chain = if (cadenceBase.isEmpty) chainOf(vs, bs, horizon) else Seq.empty
+    val (chainIndexes, gcIndexes) = readIndexes(chain ++ toDelete).splitAt(chain.size)
+    val (basePuts, baseDeletes) =
+      if (chain.isEmpty) (Seq.empty, Seq.empty)
+      else {
+        val full = resolveIndexed(chain.zip(chainIndexes), Array.emptyByteArray)
+        val p = versionPrefix(horizon)
+        // the horizon's own index lists its delta: live puts are
+        // overwritten by the materialization, the rest are dead tombstones
+        val dead = chainIndexes.last.filterNot(k => full.contains(new BytesKey(k)))
+        (full.iterator.map { case (k, v) => (p ++ k.bytes, framePut(v)) }.toSeq ++ Seq(
+          indexKey(horizon) -> encodeIndex(full.keysIterator.map(_.bytes).toSeq),
+          statsKey(horizon) -> encodeStats(countStats(full))),
+          dead.map(p ++ _))
+      }
+    val gcDeletes = toDelete.zip(gcIndexes).flatMap { case (v, keys) =>
+      val p = versionPrefix(v)
+      keys.map(p ++ _) ++ Seq(indexKey(v), statsKey(v))
     }
-    // (3) epoch-deferred GC: physically delete what the PREVIOUS run
-    // deregistered (no live chain can reference it anymore), then
-    // deregister this run's sub-horizon versions and record them as
-    // pending — registry shrink + pending handoff in one atomic batch
-    val toDelete = readVersionSet(gcPendingKey).filter(_ < horizon)
-    toDelete.foreach(v => client.deletePrefix(versionPrefix(v)))
-    val newPending = committed().filter(_ < horizon)
+    // deregister this run's sub-horizon versions and record them as pending
+    val newPending = vs.filter(_ < horizon)
     // bump the GC epoch whenever this run deregistered or deleted a
     // keyspace — open sessions key their chain-intact tripwire off it
     val epochPut =
       if (toDelete.nonEmpty || newPending.nonEmpty)
-        Seq(gcEpochKey -> (readGcEpoch() + 1).toString.getBytes("UTF-8"))
+        Seq(gcEpochKey -> (parseGcEpoch(epochRaw) + 1).toString.getBytes("UTF-8"))
       else Seq.empty
-    client.writeBatch(epochPut ++ Seq(
-      versionsKey -> encodeVersionSet(committed().filter(_ >= horizon)),
-      basesKey -> encodeVersionSet(bases().filter(_ >= horizon)),
+    client.writeBatch(basePuts ++ epochPut ++ Seq(
+      versionsKey -> encodeVersionSet(vs.filter(_ >= horizon)),
+      basesKey -> encodeVersionSet((bs + horizon).filter(_ >= horizon)),
       gcPendingKey -> encodeVersionSet(newPending)),
-      toDelete.toSeq.map(statsKey))
+      baseDeletes ++ gcDeletes)
   }
 
   override def close(): Unit = client.close()
@@ -542,6 +597,24 @@ object KvSessionBackend {
     * (same amortization as the RocksDB snapshot cadence).
     */
   val BaseInterval = 10
+
+  /** A key index: each key as a 4-byte big-endian length and its bytes. */
+  private[state] def encodeIndex(keys: Seq[Array[Byte]]): Array[Byte] = {
+    val buf = java.nio.ByteBuffer.allocate(keys.iterator.map(4 + _.length).sum)
+    keys.foreach(k => buf.putInt(k.length).put(k))
+    buf.array()
+  }
+
+  private[state] def decodeIndex(raw: Array[Byte]): Vector[Array[Byte]] = {
+    val buf = java.nio.ByteBuffer.wrap(raw)
+    val keys = Vector.newBuilder[Array[Byte]]
+    while (buf.hasRemaining) {
+      val k = new Array[Byte](buf.getInt())
+      buf.get(k)
+      keys += k
+    }
+    keys.result()
+  }
 }
 
 /** Provider wiring the KV seam to a backend chosen by conf

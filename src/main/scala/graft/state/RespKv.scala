@@ -13,13 +13,15 @@ import scala.collection.mutable
   * exercise a REAL socket round-trip instead of only the in-JVM map.
   *
   * [[RespKvClient]] speaks the same command set a Jedis-driven provider
-  * would — GET, MULTI/SET/DEL/EXEC for transactional batches (reference
-  * RedisStateStoreProvider.scala:100-133 uses pipelined MULTI the same
-  * way), cursor-looped SCAN MATCH + chunked MGET for prefix iteration,
-  * SCAN + DEL for prefix deletion (Redis has no native delete-by-prefix;
-  * this is the canonical client-side shape). Point it at a real Redis and
-  * it works; point it at [[RespKvServer]] and the offline suites gate the
-  * full protocol path.
+  * would — GET, MGET (one round trip per 512 keys) for point reads and
+  * key-index reads, MULTI/SET/DEL/EXEC for transactional batches
+  * (reference RedisStateStoreProvider.scala:100-133 uses pipelined MULTI
+  * the same way). [[KvSessionBackend]] needs nothing else: it names every
+  * key it touches through per-version key indexes. Cursor-looped SCAN
+  * MATCH + MGET (prefix iteration) and SCAN + DEL (prefix deletion, which
+  * Redis has no native form of) remain for callers that address data by
+  * prefix. Point it at a real Redis and it works; point it at
+  * [[RespKvServer]] and the offline suites gate the full protocol path.
   *
   * [[RespKvServer]] serves the [[EmbeddedKvServer]] keyspace over a
   * localhost socket: binary-safe bulk strings, per-connection MULTI
@@ -134,8 +136,7 @@ object Resp {
   * connection (the session backends already serialize their own access;
   * the lock makes the adapter safe for incidental sharing). Prefix scans
   * materialize the key list client-side — matching the reference Redis
-  * provider's iteration shape; a store partition's keyspace is the unit
-  * already sized to fit an executor.
+  * provider's iteration shape.
   */
 final class RespKvClient(host: String, port: Int) extends KvClient {
   import Resp._
@@ -157,6 +158,18 @@ final class RespKvClient(host: String, port: Int) extends KvClient {
       case Bulk(b) => b
       case r => fail(r)
     }
+  }
+
+  override def mget(keys: Seq[Array[Byte]]): Seq[Array[Byte]] = synchronized {
+    keys.grouped(MgetChunk).flatMap { chunk =>
+      writeCommand(out, "MGET".getBytes(US_ASCII) +: chunk: _*)
+      out.flush()
+      readReply(in) match {
+        case ArrayRep(vals) if vals != null && vals.size == chunk.size =>
+          vals.map { case Bulk(v) => v; case r => fail(r) }
+        case r => fail(r)
+      }
+    }.toVector
   }
 
   def writeBatch(puts: Seq[(Array[Byte], Array[Byte])], deletes: Seq[Array[Byte]]): Unit =
@@ -205,18 +218,10 @@ final class RespKvClient(host: String, port: Int) extends KvClient {
   }
 
   def scanPrefix(prefix: Array[Byte]): Iterator[(Array[Byte], Array[Byte])] = synchronized {
-    val pairs = scanKeys(prefix).grouped(MgetChunk).flatMap { chunk =>
-      writeCommand(out, "MGET".getBytes(US_ASCII) +: chunk: _*)
-      out.flush()
-      readReply(in) match {
-        case ArrayRep(vals) =>
-          // a key deleted between SCAN and MGET comes back nil — drop it,
-          // exactly what a live-Redis client has to do
-          chunk.zip(vals).collect { case (k, Bulk(v)) if v != null => (k, v) }
-        case r => fail(r)
-      }
-    }.toList
-    pairs.iterator
+    val keys = scanKeys(prefix)
+    // a key deleted between SCAN and MGET comes back nil — drop it,
+    // exactly what a live-Redis client has to do
+    keys.iterator.zip(mget(keys).iterator).filter(_._2 != null)
   }
 
   def deletePrefix(prefix: Array[Byte]): Unit = synchronized {

@@ -17,23 +17,30 @@ class CommitLatencySuite extends AnyFunSuite {
 
   private def bytes(s: String): Array[Byte] = s.getBytes("UTF-8")
 
-  /** Counts data puts per writeBatch (registry keys excluded) and
-    * scanPrefix calls. */
+  /** Counts data puts per writeBatch (registry keys excluded), every
+    * client call (mget included), and scanPrefix and deletePrefix calls. */
   private class CountingClient(namespace: String) extends KvClient {
     private val inner = EmbeddedKvServer.client(namespace)
     var dataPutsPerBatch = List.empty[Int]
     var scans = 0
-    def get(key: Array[Byte]): Array[Byte] = inner.get(key)
+    var prefixDeletes = 0
+    var calls = 0
+    def get(key: Array[Byte]): Array[Byte] = { calls += 1; inner.get(key) }
+    override def mget(keys: Seq[Array[Byte]]): Seq[Array[Byte]] = { calls += 1; inner.mget(keys) }
     def writeBatch(puts: Seq[(Array[Byte], Array[Byte])], deletes: Seq[Array[Byte]]): Unit = {
+      calls += 1
       dataPutsPerBatch = dataPutsPerBatch :+
         puts.count(p => !new String(p._1, "UTF-8").contains("__"))
       inner.writeBatch(puts, deletes)
     }
     def scanPrefix(prefix: Array[Byte]): Iterator[(Array[Byte], Array[Byte])] = {
-      scans += 1
+      calls += 1; scans += 1
       inner.scanPrefix(prefix)
     }
-    def deletePrefix(prefix: Array[Byte]): Unit = inner.deletePrefix(prefix)
+    def deletePrefix(prefix: Array[Byte]): Unit = {
+      calls += 1; prefixDeletes += 1
+      inner.deletePrefix(prefix)
+    }
     def close(): Unit = inner.close()
   }
 
@@ -79,6 +86,62 @@ class CommitLatencySuite extends AnyFunSuite {
     val all = s.scan(Array.emptyByteArray).toSeq
     assert(keys === 201 && keys === all.size)
     assert(size === all.map { case (kk, v) => kk.length + v.length }.sum)
+  }
+
+  test("kv backend: no path scans the server, and a point read is one round trip") {
+    EmbeddedKvServer.clear()
+    val counting = new CountingClient("round-trip-test")
+    val backend = new KvSessionBackend("store", counting, baseInterval = 12)
+    var model = Map.empty[String, String]
+    def put(s: StoreSession, key: String, value: String): Unit = {
+      s.put(bytes(key), bytes(value)); model += key -> value
+    }
+    def remove(s: StoreSession, key: String): Unit = { s.remove(bytes(key)); model -= key }
+    /** Reads `keys` through `s`, one client call each, against the model. */
+    def pointReads(s: StoreSession, keys: Seq[String]): Unit = keys.foreach { key =>
+      val before = counting.calls
+      assert(Option(s.get(bytes(key))).map(new String(_, "UTF-8")) === model.get(key), key)
+      assert(counting.calls - before === 1, s"point read of $key took ${counting.calls - before} calls")
+    }
+
+    // v1..v10: a 10-deep delta chain (v1 stands in for its base), each
+    // version with its own keys and a tombstone for one of the previous
+    (1 to 10).foreach { v =>
+      val s = backend.open(v - 1, v)
+      (1 to 20).foreach(i => put(s, s"k$v-$i", s"v$v"))
+      if (v > 1) remove(s, s"k${v - 1}-1")
+      s.commit()
+    }
+    // decided in v1 (all ten keyspaces probed), mid-chain, a tombstone, absent
+    val s11 = backend.open(10, 11)
+    pointReads(s11, Seq("k1-2", "k5-3", "k4-1", "absent", "k10-7"))
+    // a blind-put delta commit
+    put(s11, "k1-3", "blind"); put(s11, "new11", "x"); remove(s11, "k2-2")
+    s11.commit()
+    // a cadence-base commit, then a replayed delta commit
+    val s12 = backend.open(11, 12)
+    put(s12, "new12", "y")
+    s12.commit()
+    val first13 = backend.open(12, 13)
+    first13.put(bytes("stale13"), bytes("z")); first13.put(bytes("new12"), bytes("q"))
+    first13.commit()
+    val s13 = backend.open(12, 13)
+    put(s13, "new13", "w"); remove(s13, "k3-4")
+    s13.commit()
+    // maintenance without a cadence base old enough (materializes v9),
+    // then with one (v12), then the deferred deletes
+    backend.doMaintenance(minVersionsToRetain = 5)
+    backend.doMaintenance(minVersionsToRetain = 2)
+    backend.doMaintenance(minVersionsToRetain = 2)
+    assert(backend.committedVersions() === Seq(12L, 13L))
+    // a reopen on a fresh backend resolves the model
+    val reopened = new KvSessionBackend("store", counting, baseInterval = 12).open(13, 14)
+    pointReads(reopened, Seq("k1-2", "k1-3", "k2-2", "stale13", "new12", "new13", "k3-4", "absent"))
+    val state = reopened.scan(Array.emptyByteArray)
+      .map { case (kk, v) => new String(kk, "UTF-8") -> new String(v, "UTF-8") }.toMap
+    assert(state === model)
+    assert(counting.scans === 0 && counting.prefixDeletes === 0,
+      s"${counting.scans} scanPrefix and ${counting.prefixDeletes} deletePrefix calls")
   }
 
   test("rocksdb backend: commit durability stays bounded across versions 1..20") {

@@ -9,12 +9,15 @@ import org.scalatest.funsuite.AnyFunSuite
 class KvDeltaCommitSuite extends AnyFunSuite {
 
   /** Counts data puts per writeBatch (registry keys excluded) and
-    * scanPrefix calls. */
+    * scanPrefix, deletePrefix and mget calls. */
   private class CountingClient(inner: KvClient) extends KvClient {
     var lastBatchDataPuts: Int = 0
     val batchDataPuts = scala.collection.mutable.ArrayBuffer.empty[Int]
     var scans = 0
+    var prefixDeletes = 0
+    var mgets = 0
     def get(key: Array[Byte]): Array[Byte] = inner.get(key)
+    override def mget(keys: Seq[Array[Byte]]): Seq[Array[Byte]] = { mgets += 1; inner.mget(keys) }
     def writeBatch(puts: Seq[(Array[Byte], Array[Byte])], deletes: Seq[Array[Byte]]): Unit = {
       val dataPuts = puts.count { case (k, _) =>
         !new String(k, "UTF-8").contains("__")
@@ -27,11 +30,34 @@ class KvDeltaCommitSuite extends AnyFunSuite {
       scans += 1
       inner.scanPrefix(prefix)
     }
-    def deletePrefix(prefix: Array[Byte]): Unit = inner.deletePrefix(prefix)
+    def deletePrefix(prefix: Array[Byte]): Unit = { prefixDeletes += 1; inner.deletePrefix(prefix) }
     def close(): Unit = inner.close()
   }
 
   private def k(s: String): Array[Byte] = s.getBytes("UTF-8")
+  private def str(b: Array[Byte]): String = new String(b, "UTF-8")
+
+  /** Every registered or GC-pending version's key index lists exactly the
+    * keys under its prefix, and no other version holds keys or an index.
+    * Reads the in-JVM server by prefix; the test keys hold no ':'. */
+  private def assertIndexesExact(client: KvClient, prefix: String, step: String): Unit = {
+    def versions(registry: String): Set[Long] =
+      Option(client.get(k(s"$prefix:$registry"))).map(str).toSeq
+        .flatMap(_.split(',')).filter(_.nonEmpty).map(_.toLong).toSet
+    val live = versions("__versions__") ++ versions("__gcpending__")
+    val held = client.scanPrefix(k(s"$prefix:")).map(e => str(e._1).drop(prefix.length + 1))
+      .filterNot(_.startsWith("__")).toSeq
+      .groupBy(_.takeWhile(_ != ':').toLong)
+      .map { case (v, keys) => v -> keys.map(_.dropWhile(_ != ':').drop(1)).toSet }
+    val indexed = client.scanPrefix(k(s"$prefix:__keys__:")).map { case (kk, raw) =>
+      str(kk).split(':').last.toLong -> KvSessionBackend.decodeIndex(raw).map(str).toSet
+    }.toMap
+    assert(indexed.keySet === live, s"$step: indexes for ${indexed.keySet}, live versions $live")
+    live.foreach { v =>
+      assert(held.getOrElse(v, Set.empty) === indexed(v), s"$step: version $v's index differs from its keys")
+    }
+    assert(held.keySet.subsetOf(live), s"$step: keys left under dead versions ${held.keySet -- live}")
+  }
 
   test("commit writes are proportional to the batch delta; bases amortize") {
     EmbeddedKvServer.clear()
@@ -113,6 +139,7 @@ class KvDeltaCommitSuite extends AnyFunSuite {
       s.commit()
     }
     client.scans = 0
+    client.mgets = 0
     client.batchDataPuts.clear()
     backend.doMaintenance(minVersionsToRetain = 4)
     // the oldest version to retain is 9; base 5 is the newest base at or
@@ -120,6 +147,9 @@ class KvDeltaCommitSuite extends AnyFunSuite {
     assert(backend.committedVersions() === (5L to 12L))
     assert(client.scans === 0 && client.batchDataPuts.sum === 0,
       s"maintenance scanned ${client.scans} prefixes, wrote ${client.batchDataPuts}")
+    // nothing was GC-pending yet: its only read is the registries, in one round trip
+    assert(client.mgets === 1 && client.prefixDeletes === 0,
+      s"maintenance made ${client.mgets} mget and ${client.prefixDeletes} deletePrefix calls")
     val s = backend.open(12, 13)
     assert(s.get(k("k1")) === null)
     assert(new String(s.get(k("k2")), "UTF-8") === "v2")
@@ -331,17 +361,20 @@ class KvDeltaCommitSuite extends AnyFunSuite {
       val m = runBatch(s, model)
       if (v % 3 == 0) check(s, m, s"v$v before commit")
       s.commit()
+      assertIndexesExact(client, "store", s"v$v committed")
       check(s, m, s"v$v after commit")
       if (v == 12) {
         // replay v12 with a different delta over the same parent
         val replay = backend.open(11, 12)
         model = runBatch(replay, model)
         replay.commit()
+        assertIndexesExact(client, "store", "v12 replayed")
         check(replay, model, "v12 replayed")
       } else model = m
       check(backend.open(v, v + 1), model, s"v$v reopened")
       if (v % 4 == 0) {
         backend.doMaintenance(3)
+        assertIndexesExact(client, "store", s"v$v maintained")
         check(backend.open(v, v + 1), model, s"v$v after maintenance")
       }
     }
@@ -377,5 +410,69 @@ class KvDeltaCommitSuite extends AnyFunSuite {
     assert(client.get(k("store:__stats__:4")) !== null)
     val s7 = backend.open(4, 5)
     assert((s7.numKeys, s7.sizeBytes) === (3L, 15L))
+  }
+
+  test("maintenance whose batch fails leaves every key indexed, and the next run collects it") {
+    EmbeddedKvServer.clear()
+    val inner = EmbeddedKvServer.client("dead-fail-test")
+    var failDeletes = true
+    // throws on the batch that deletes the horizon's dead entries
+    val client = new KvClient {
+      def get(key: Array[Byte]): Array[Byte] = inner.get(key)
+      def writeBatch(puts: Seq[(Array[Byte], Array[Byte])], deletes: Seq[Array[Byte]]): Unit =
+        if (failDeletes && deletes.exists(d => !str(d).contains("__")))
+          throw new java.io.IOException("injected: dead-key delete batch")
+        else inner.writeBatch(puts, deletes)
+      def scanPrefix(prefix: Array[Byte]): Iterator[(Array[Byte], Array[Byte])] = inner.scanPrefix(prefix)
+      def deletePrefix(prefix: Array[Byte]): Unit = inner.deletePrefix(prefix)
+      def close(): Unit = inner.close()
+    }
+    val backend = new KvSessionBackend("store", client, baseInterval = 1000)
+    val s1 = backend.open(0, 1)
+    s1.put(k("keep"), k("v")); s1.put(k("drop"), k("v"))
+    s1.commit()
+    val s2 = backend.open(1, 2)
+    s2.remove(k("drop"))
+    s2.commit()
+    val s3 = backend.open(2, 3)
+    s3.put(k("keep"), k("v3"))
+    s3.commit()
+    intercept[java.io.IOException](backend.doMaintenance(minVersionsToRetain = 2))
+    assertIndexesExact(inner, "store", "after the failed run")
+    assert(inner.get(k("store:2:drop")) !== null)
+    failDeletes = false
+    backend.doMaintenance(minVersionsToRetain = 2)
+    assertIndexesExact(inner, "store", "after the next run")
+    assert(inner.get(k("store:2:drop")) === null, "the dead tombstone was never collected")
+    val r = backend.open(3, 4)
+    assert(r.get(k("drop")) === null)
+    assert(str(r.get(k("keep"))) === "v3")
+    assert(r.scan(Array.emptyByteArray).size === 1)
+  }
+
+  test("a registered version without its key index fails loudly, naming the version") {
+    EmbeddedKvServer.clear()
+    val client = EmbeddedKvServer.client("missing-index-test")
+    val backend = new KvSessionBackend("store", client, baseInterval = 4)
+    (1 to 3).foreach { v =>
+      val s = backend.open(v - 1, v); s.put(k(s"k$v"), k(s"v$v")); s.commit()
+    }
+    client.writeBatch(Seq.empty, Seq(k("store:__keys__:2")))
+    def failsNaming2(op: => Any): Unit = {
+      val ex = intercept[IllegalStateException](op)
+      assert(ex.getMessage.contains("state version 2 of store has no key index"), ex.getMessage)
+    }
+    // point reads name their keys and need no index
+    val s = backend.open(3, 4)
+    assert(str(s.get(k("k2"))) === "v2")
+    // every read that enumerates version 2 refuses to treat it as empty
+    failsNaming2(s.scan(Array.emptyByteArray))
+    s.put(k("k4"), k("v4"))
+    failsNaming2(s.commit()) // v4 is a cadence base: it resolves the chain
+    val replay = backend.open(1, 2)
+    replay.put(k("k2"), k("again"))
+    failsNaming2(replay.commit()) // a replay diffs against the earlier index
+    failsNaming2(backend.doMaintenance(minVersionsToRetain = 1))
+    assert(backend.committedVersions() === Seq(1L, 2L, 3L), "a failed operation changed the registry")
   }
 }
